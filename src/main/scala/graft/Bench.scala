@@ -52,7 +52,7 @@ object Bench {
       // re-renders per replan; q379's cached-heavy plan rendered 8
       // MB-scale strings per bench pass (measured WARNs). Truncation
       // bounds the rendering work itself; plans/ artifacts come from
-      // Explain/PlanDump sessions, which don't set this cap.
+      // Explain sessions, which don't set this cap.
       .config("spark.sql.maxPlanStringLength", (1 << 15).toString)
       // NOTE: each testdata parquet is a single row group, so scan
       // stages are inherently one task here regardless of

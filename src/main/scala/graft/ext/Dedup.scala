@@ -763,15 +763,17 @@ object Dedup {
     // dst — the dominant per-sweep shuffle at scale. Pinned on dst,
     // each sweep's edges⋈labels join co-locates the edge side for
     // free and only the node-sized label frame moves.
-    val edges = graft.ops.Sweep.pin(
-      graft.ops.Sweep.symmetrize(pairs, aCol, bCol).distinct(), "dst")
+    val (edges, edgeRows) = graft.ops.Sweep.pin(
+      graft.ops.Sweep.symmetrize(pairs, aCol, bCol).distinct(), Seq("dst"),
+      pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     val idType = pairs.schema(aCol).dataType
     val integral = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
     // the pin already materialized the edge list, so neither path
-    // recomputes pair generation; the gate count is a checkpoint scan
+    // recomputes pair generation; the gate count is the pin's own
+    // fused count (a separate count job before)
     if (integral && smallGraphThreshold > 0 &&
-        edges.count() <= smallGraphThreshold) {
+        edgeRows <= smallGraphThreshold) {
       return (driverComponents(pairs.sparkSession, edges, idType), 0)
     }
     // seed at sweep-1's result directly: label = min(v, min neighbors)

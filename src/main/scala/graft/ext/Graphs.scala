@@ -2,12 +2,19 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Sweep
+import graft.ops.Sweep.Halt
 
 /** Iterative graph scoring. Connected components (the dedup-cluster
   * primitive) lives in [[Dedup.connectedComponents]]; this adds the
   * other workhorse: PageRank, the importance score behind
   * link-graph-weighted corpus curation (e.g. Common-Crawl harmonic/
   * PageRank centrality as a document quality prior).
+  *
+  * Every sweep operator runs inside [[Sweep.edgeScope]] (edge frame
+  * pinned once with its count, scale-adaptive partition count `np`)
+  * and states only its own relaxation step; pins, folds and seals all
+  * take that `np`.
   */
 object Graphs {
 
@@ -20,14 +27,14 @@ object Graphs {
     *
     * Scale shape (r13): the degree-annotated symmetric adjacency is
     * materialized ONCE with its hash partitioning DECLARED
-    * (partitioning-preserving checkpoint — see [[pin]]); each sweep
-    * is then one co-located join of the node-sized rank frame against
-    * it plus one mass aggregate, and the ONLY per-sweep shuffle
-    * carries one row per node. N is fetched once driver-side (one
-    * Long — the operator is already eager through the checkpoint);
-    * the per-node rank expression computes the identical IEEE values
-    * the in-plan broadcast form did. Measured on the driver bench
-    * graph: 32 → 16 scheduler jobs, 907 → 252 tasks, hashes
+    * (partitioning-preserving checkpoint — see [[Sweep.pin]]); each
+    * sweep is then one co-located join of the node-sized rank frame
+    * against it plus one mass aggregate, and the ONLY per-sweep
+    * shuffle carries one row per node. N is fetched once driver-side
+    * (one Long — the operator is already eager through the
+    * checkpoint); the per-node rank expression computes the identical
+    * IEEE values the in-plan broadcast form did. Measured on the
+    * bench's graph: 32 → 16 scheduler jobs, 907 → 252 tasks, hashes
     * unchanged.
     *
     * Determinism: additions inside the per-node mass sum commute at
@@ -37,38 +44,19 @@ object Graphs {
     * `(1.0 - 0.85)` — the decimal literal 0.15 parses to a DIFFERENT
     * double.
     *
-    * Returns (node, degree, pr).
-    */
-  /** `dedupEdges = false` skips the symmetric-union distinct — one
+    * `dedupEdges = false` skips the symmetric-union distinct — one
     * full edge-list shuffle — when the caller guarantees the input
     * has no duplicate or reversed-duplicate edges (e.g. a DISTINCT
     * bipartite projection whose two id spaces are prefix-disjoint:
-    * both walk directions are then unique by construction). */
+    * both walk directions are then unique by construction).
+    *
+    * Returns (node, degree, pr).
+    */
   def pageRank(edges: DataFrame, aCol: String, bCol: String,
                iterations: Int = 3, damping: Double = 0.85,
                dedupEdges: Boolean = true): DataFrame =
-    // Terminal pin (r16): the k-sweep fold below is LAZY, so under AQE
-    // the consumer's action materialized every sweep's mass shuffle as
-    // its own scheduler job (~2 jobs/sweep measured on q90). AQE has
-    // nothing to decide anywhere in the fold — every join has a
-    // declared-partitioning checkpoint side (skew-join needs shuffle
-    // stages on BOTH sides), every shuffle is an aggregate exchange
-    // (no AQE skew remedy exists for aggregates), and coalescing one
-    // would break its co-location against the fixed-count checkpoint —
-    // so materializing the fold through [[pin]] (which scopes AQE off)
-    // collapses the whole chain into ONE job and hands consumers a
-    // node-sized frame with its hash(node) partitioning declared.
-    // Values are bit-identical: the pin only adds a repartition over
-    // the same expressions. Plan introspection uses [[pageRankLazy]].
-    {
-      val (terminal, np) =
-        pageRankBuild(edges, aCol, bCol, iterations, damping, dedupEdges)
-      // the terminal pin plans the whole fold — keep it at the same
-      // partition count so every sweep join stays co-located
-      graft.ops.Sweep.withShufflePartitions(edges.sparkSession, np) {
-        pin(terminal, "node")
-      }
-    }
+    unweightedPageRank(edges, aCol, bCol, iterations, damping, dedupEdges,
+      terminalPin = true)
 
   /** The lazy (unpinned) fold behind [[pageRank]] — kept separate so
     * specs/tools can assert the per-sweep exchange shape on the
@@ -77,109 +65,20 @@ object Graphs {
       edges: DataFrame, aCol: String, bCol: String,
       iterations: Int, damping: Double,
       dedupEdges: Boolean): DataFrame =
-    pageRankBuild(edges, aCol, bCol, iterations, damping, dedupEdges)._1
+    unweightedPageRank(edges, aCol, bCol, iterations, damping, dedupEdges,
+      terminalPin = false)
 
-  private def pageRankBuild(
-      edges: DataFrame, aCol: String, bCol: String,
-      iterations: Int, damping: Double,
-      dedupEdges: Boolean): (DataFrame, Int) = {
-    require(iterations >= 1, "iterations must be >= 1")
+  private def unweightedPageRank(
+      edges: DataFrame, aCol: String, bCol: String, iterations: Int,
+      damping: Double, dedupEdges: Boolean, terminalPin: Boolean): DataFrame = {
     // Symmetrize with ONE read of `edges` (explode of both
     // orientations). The r12 union form read the caller's edge
     // pipeline twice — for q90 that was the whole
     // lineitem⋈orders⋈distinct build duplicated into both union legs.
-    val symRaw = symmetrize(edges, aCol, bCol)
-    // r21: the symmetric frame is itself pinned (counted) BEFORE the
-    // degree/adjacency pins — previously `sym` was lazy, so the whole
-    // caller edge build (for q90 the lineitem⋈orders join + explode)
-    // ran TWICE: once materializing the deg pin, once the adj pin
-    // (measured 1.44 s + 1.69 s of the query's 5.6 s at sf0.1). Now
-    // the build runs once and both pins derive from the checkpoint;
-    // the fused count also feeds the scale-adaptive partition count.
-    val (sym, np, _) = pinEdgesAdaptive(
-      if (dedupEdges) symRaw.distinct() else symRaw, "src")
-    graft.ops.Sweep.withShufflePartitions(edges.sparkSession, np) {
-      // The degree-annotated adjacency and the degree table are pinned
-      // with an EAGER localCheckpoint ([[pin]]), not a lazy cache: a
-      // cached plan's hash partitioning is invisible to consumers under
-      // AQE (the cache boundary reports unknown partitioning), so the
-      // r12 cache-based form re-exchanged the EDGE frame on src every
-      // sweep — the exact shuffle the scaladoc promised away. The
-      // checkpoint materializes through LogicalRDD, which carries the
-      // physical partitioning: deg arrives hash(src) from its
-      // aggregate, adj hash(src) from the join, and every sweep's SMJ
-      // then co-locates against the node-sized rank frame with NO edge
-      // re-shuffle (plan-asserted in GraphsSpec).
-      // N is ONE number and the pin's materializing action is a count:
-      // pinCounted returns it from the SAME job (the r14 shape paid a
-      // second job re-scanning the fresh blocks). 1.0/N and (1-d)/N are
-      // computed by the same IEEE ops the in-plan form used, so every
-      // rank double is bit-identical.
-      val (deg, nRows) =
-        pinCounted(sym.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      val adj = pin(sym.join(deg, "src"), "src")
-      val n = nRows.toDouble
-      val init = deg.select(col("src").as("node"), lit(1.0 / n).as("pr"))
-      // Per-sweep frames are NOT staged: each has exactly one consumer
-      // (the next sweep), the lineage roots at the two checkpoints, and
-      // each sweep's mass aggregate lands already partitioned on
-      // dst(=node) — alias-tracked through the rename — so the next
-      // sweep's join re-uses it against adj's src partitioning. One
-      // node-sized shuffle per sweep, nothing else.
-      val terminal = (1 to iterations).foldLeft(init) { (pr, _) =>
-        adj.join(pr.hint("shuffle_hash"), col("src") === col("node"))
-          .groupBy("dst")
-          .agg(sum(col("pr") / col("deg")).as("__mass"))
-          .select(col("dst").as("node"),
-            (lit((1.0 - damping) / n) +
-              lit(damping) * col("__mass")).as("pr"))
-      }
-      // r22 (r21 verdict item 4): the terminal degree join gets the
-      // same shuffled-hash treatment as the sweep mass joins — both
-      // sides are node-sized pins already co-located on the join key,
-      // so SMJ's only contribution was two per-run sorts
-      (terminal.join(deg.hint("shuffle_hash"), col("node") === col("src"))
-        .select(col("node"), col("deg").as("degree"), col("pr")), np)
-    }
-  }
-
-  // the shared sweep harness ([[graft.ops.Sweep]]): one-pass
-  // symmetrization + partitioning-declared checkpoints
-  private def symmetrize(edges: DataFrame, aCol: String,
-                         bCol: String): DataFrame =
-    graft.ops.Sweep.symmetrize(edges, aCol, bCol)
-  private def symmetrizeW(edges: DataFrame, aCol: String, bCol: String,
-                          w: Column): DataFrame =
-    graft.ops.Sweep.symmetrizeW(edges, aCol, bCol, w)
-  private def pin(df: DataFrame, keys: String*): DataFrame =
-    graft.ops.Sweep.pin(df, keys: _*)
-  private def pinCounted(df: DataFrame, keys: String*): (DataFrame, Long) =
-    graft.ops.Sweep.pinCounted(df, keys: _*)
-
-  /** Pin an operator's edge frame ONCE with a fused count, derive the
-    * scale-adaptive sweep partition count from the MEASURED edge rows
-    * ([[graft.ops.Sweep.sweepPartitions]] — r21, guide §2.2), and
-    * re-pin at that count when it differs from the session default.
-    * At 100 TB the clamp makes the two equal, so the re-pin branch
-    * never runs and the operator behaves exactly as before; on a
-    * small/sparse graph it stops every sweep stage from scheduling a
-    * full shuffle.partitions grid of near-empty tasks. Callers wrap
-    * their pin/fold phase in `withShufflePartitions(sp, np)` so every
-    * exchange planned inside (per-sweep aggregates, chunk seals)
-    * shares the count and sweep joins stay co-located. Returns
-    * (pinned edges, np, edge rows). */
-  private def pinEdgesAdaptive(e: DataFrame,
-                               keys: String*): (DataFrame, Int, Long) = {
-    val sp = e.sparkSession
-    val (p0, rows) = pinCounted(e, keys: _*)
-    val np = graft.ops.Sweep.sweepPartitions(sp, rows)
-    val defN = sp.conf.get("spark.sql.shuffle.partitions").toInt
-    if (np == defN) (p0, np, rows)
-    else {
-      val p = graft.ops.Sweep.pinN(p0, keys, np)
-      graft.ops.Staging.dropCheckpoint(p0)
-      (p, np, rows)
-    }
+    val sym = Sweep.symmetrize(edges, aCol, bCol)
+    undirectedPageRank(if (dedupEdges) sym.distinct() else sym,
+      iterations, damping, count(lit(1)).as("deg"),
+      sum(col("pr") / col("deg")), "degree", terminalPin)
   }
 
   /** WEIGHTED PageRank over an undirected weighted edge list: mass
@@ -195,49 +94,83 @@ object Graphs {
   def pageRankWeighted(edges: DataFrame, aCol: String, bCol: String,
                        wCol: String, iterations: Int = 3,
                        damping: Double = 0.85): DataFrame =
-    // terminal pin: one non-AQE job for the whole fold — see
-    // [[pageRank]]'s argument (identical fold shape, weighted mass)
-    {
-      val (terminal, np) =
-        pageRankWeightedBuild(edges, aCol, bCol, wCol, iterations, damping)
-      graft.ops.Sweep.withShufflePartitions(edges.sparkSession, np) {
-        pin(terminal, "node")
-      }
-    }
+    undirectedPageRank(
+      Sweep.symmetrizeW(edges, aCol, bCol, col(wCol).cast("double")),
+      iterations, damping, sum("w").as("wtot"),
+      sum(col("pr") * col("w") / col("wtot")), "total_weight",
+      terminalPin = true)
 
-  private[graft] def pageRankWeightedLazy(
-      edges: DataFrame, aCol: String, bCol: String,
-      wCol: String, iterations: Int, damping: Double): DataFrame =
-    pageRankWeightedBuild(edges, aCol, bCol, wCol, iterations, damping)._1
-
-  private def pageRankWeightedBuild(
-      edges: DataFrame, aCol: String, bCol: String,
-      wCol: String, iterations: Int, damping: Double): (DataFrame, Int) = {
+  /** The sweep shared by [[pageRank]] and [[pageRankWeighted]] over a
+    * symmetric (src, dst[, w]) edge frame: `total` is the per-node
+    * aggregate (degree or incident weight, reported as `totalOut`) and
+    * `mass` the per-sweep inflow aggregate over adjacency ⋈ rank. */
+  private def undirectedPageRank(
+      sym: DataFrame, iterations: Int, damping: Double, total: Column,
+      mass: Column, totalOut: String, terminalPin: Boolean): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    // same sweep shape as [[pageRank]]: one-pass symmetrization, the
-    // edge frame pinned ONCE (r21 — the caller's edge build used to
-    // run twice, into the wt pin and again into the adj pin),
-    // partitioning-declared checkpoints at the scale-adaptive count,
-    // driver-side N, one node-sized shuffle per sweep
-    val (sym, np, _) = pinEdgesAdaptive(
-      symmetrizeW(edges, aCol, bCol, col(wCol).cast("double")), "src")
-    graft.ops.Sweep.withShufflePartitions(edges.sparkSession, np) {
-      val (wt, nRows) =
-        pinCounted(sym.groupBy("src").agg(sum("w").as("wtot")), "src")
-      val adj = pin(sym.join(wt, "src"), "src")
+    // r21: the symmetric frame is itself pinned (counted) BEFORE the
+    // degree/adjacency pins — previously `sym` was lazy, so the whole
+    // caller edge build (for q90 the lineitem⋈orders join + explode)
+    // ran TWICE: once materializing the deg pin, once the adj pin
+    // (measured 1.44 s + 1.69 s of the query's 5.6 s at sf0.1). Now
+    // the build runs once and both pins derive from the checkpoint;
+    // the fused count also feeds the scale-adaptive partition count.
+    Sweep.edgeScope(sym, "src") { (e, np, _) =>
+      // The total-annotated adjacency and the total table are pinned
+      // with an EAGER checkpoint ([[Sweep.pin]]), not a lazy cache: a
+      // cached plan's hash partitioning is invisible to consumers under
+      // AQE (the cache boundary reports unknown partitioning), so the
+      // r12 cache-based form re-exchanged the EDGE frame on src every
+      // sweep — the exact shuffle the scaladoc promised away. The pin
+      // declares the physical partitioning: tot arrives hash(src) from
+      // its aggregate, adj hash(src) from the join, and every sweep's
+      // join then co-locates against the node-sized rank frame with NO
+      // edge re-shuffle (plan-asserted in GraphsSpec).
+      // N is ONE number and the pin's materializing action is a count:
+      // the pin returns it from the SAME job (the r14 shape paid a
+      // second job re-scanning the fresh blocks). 1.0/N and (1-d)/N are
+      // computed by the same IEEE ops the in-plan form used, so every
+      // rank double is bit-identical.
+      val (tot, nRows) = Sweep.pin(e.groupBy("src").agg(total), Seq("src"), np)
+      val adj = Sweep.pin(e.join(tot, "src"), Seq("src"), np)._1
       val n = nRows.toDouble
-      val init = wt.select(col("src").as("node"), lit(1.0 / n).as("pr"))
+      val init = tot.select(col("src").as("node"), lit(1.0 / n).as("pr"))
+      // Per-sweep frames are NOT staged: each has exactly one consumer
+      // (the next sweep), the lineage roots at the two checkpoints, and
+      // each sweep's mass aggregate lands already partitioned on
+      // dst(=node) — alias-tracked through the rename — so the next
+      // sweep's join re-uses it against adj's src partitioning. One
+      // node-sized shuffle per sweep, nothing else.
       val terminal = (1 to iterations).foldLeft(init) { (pr, _) =>
         adj.join(pr.hint("shuffle_hash"), col("src") === col("node"))
           .groupBy("dst")
-          .agg(sum(col("pr") * col("w") / col("wtot")).as("__mass"))
+          .agg(mass.as("__mass"))
           .select(col("dst").as("node"),
             (lit((1.0 - damping) / n) +
               lit(damping) * col("__mass")).as("pr"))
       }
-      // r22: shuffled-hash on the terminal weight join (see pageRank)
-      (terminal.join(wt.hint("shuffle_hash"), col("node") === col("src"))
-        .select(col("node"), col("wtot").as("total_weight"), col("pr")), np)
+      // r22 (r21 verdict item 4): the terminal total join gets the
+      // same shuffled-hash treatment as the sweep mass joins — both
+      // sides are node-sized pins already co-located on the join key,
+      // so SMJ's only contribution was two per-run sorts
+      val out = terminal.join(tot.hint("shuffle_hash"), col("node") === col("src"))
+        .select(col("node"), col(tot.columns(1)).as(totalOut), col("pr"))
+      // Terminal pin (r16): the k-sweep fold above is LAZY, so under AQE
+      // the consumer's action materialized every sweep's mass shuffle as
+      // its own scheduler job (~2 jobs/sweep measured on q90). AQE has
+      // nothing to decide anywhere in the fold — every join has a
+      // declared-partitioning checkpoint side (skew-join needs shuffle
+      // stages on BOTH sides), every shuffle is an aggregate exchange
+      // (no AQE skew remedy exists for aggregates), and coalescing one
+      // would break its co-location against the fixed-count checkpoint —
+      // so materializing the fold through [[Sweep.pin]] (which scopes
+      // AQE off) collapses the whole chain into ONE job and hands
+      // consumers a node-sized frame with its hash(node) partitioning
+      // declared. Values are bit-identical: the pin only adds a
+      // repartition over the same expressions. It runs at `np`, so
+      // every sweep join stays co-located. Plan introspection uses
+      // [[pageRankLazy]].
+      if (terminalPin) Sweep.pin(out, Seq("node"), np)._1 else out
     }
   }
 
@@ -266,52 +199,47 @@ object Graphs {
     require(iterations >= 1, "iterations must be >= 1")
     val e0 = edges.select(col(aCol).cast("string").as("a"),
                           col(bCol).cast("string").as("b"))
-    // r21: fused-count pin + scale-adaptive partition count (see
-    // [[pinEdgesAdaptive]]); the fold below runs inside
-    // withShufflePartitions so every round's aggregates and seals
-    // share the count and stay co-located against sym
-    val (sym, np, _) = pinEdgesAdaptive(
-      symmetrize(e0, "a", "b").distinct(), "src")
-    graft.ops.Sweep.withShufflePartitions(edges.sparkSession, np) {
-    // init rides sym's declared partitioning: the distinct on src is
-    // map-side only, and round 1's join is already co-located
-    val init = sym.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-    def step(labels: DataFrame): DataFrame = {
-      val cur = labels.select("node", "label")
-      // per-dst argmax via min_by over (-cnt, label): smallest negated
-      // count = most frequent, tie -> smallest label — identical
-      // semantics to the r12 window top-1, in a plain aggregate (no
-      // per-round window sort; the ordering value is unique per
-      // (dst, label), so min_by is deterministic). Two node-frame
-      // exchanges per round ((dst, label) counts, then dst), zero
-      // edge-frame exchanges.
-      val nxt = sym.join(cur.hint("shuffle_hash"), col("src") === col("node"))
-        .groupBy("dst", "label")
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy("dst")
-        .agg(min_by(col("label"),
-          struct((-col("cnt")).as("nc"), col("label"))).as("label"))
-      // stamp the INTEGRAL changed-vs-previous flag (r16 verdict item
-      // 6): both sides are node-sized frames already hashed on the
-      // join key (groupBy dst / the sealed node layout), so the join
-      // is co-located — no extra exchange, and hint("shuffle_hash")
-      // keeps the node list off the broadcast path ([[kCore]]'s race
-      // note) without SMJ's per-round sorts.
-      nxt.join(cur.select(col("node"), col("label").as("__prev"))
-            .hint("shuffle_hash"),
-          nxt("dst") === col("node"))
-        .select(nxt("dst").as("node"), nxt("label"),
-                (nxt("label") =!= col("__prev")).as("__chg"))
-    }
-    // Chunked fold with the synchronous-relabeling early stop: zero
-    // flagged rows in a chunk's last sweep means labels(t) ==
-    // labels(t-1), so every remaining sweep reproduces the frame —
-    // identical output, fewer chunks. The flag count is fused into
-    // each chunk pin's own materializing job.
-    graft.ops.Sweep.foldPinnedConverging(init, iterations, Seq("node"),
-        changeFlag = Some("__chg"), numPartitions = Some(np))(step)
-      .select("node", "label")
+    Sweep.edgeScope(Sweep.symmetrize(e0, "a", "b").distinct(), "src") {
+        (sym, np, _) =>
+      // init rides sym's declared partitioning: the distinct on src is
+      // map-side only, and round 1's join is already co-located
+      val init = sym.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("label"))
+      def step(labels: DataFrame): DataFrame = {
+        val cur = labels.select("node", "label")
+        // per-dst argmax via min_by over (-cnt, label): smallest negated
+        // count = most frequent, tie -> smallest label — identical
+        // semantics to the r12 window top-1, in a plain aggregate (no
+        // per-round window sort; the ordering value is unique per
+        // (dst, label), so min_by is deterministic). Two node-frame
+        // exchanges per round ((dst, label) counts, then dst), zero
+        // edge-frame exchanges.
+        val nxt = sym.join(cur.hint("shuffle_hash"), col("src") === col("node"))
+          .groupBy("dst", "label")
+          .agg(count(lit(1)).as("cnt"))
+          .groupBy("dst")
+          .agg(min_by(col("label"),
+            struct((-col("cnt")).as("nc"), col("label"))).as("label"))
+        // stamp the INTEGRAL changed-vs-previous flag (r16 verdict item
+        // 6): both sides are node-sized frames already hashed on the
+        // join key (groupBy dst / the sealed node layout), so the join
+        // is co-located — no extra exchange, and hint("shuffle_hash")
+        // keeps the node list off the broadcast path ([[kCore]]'s race
+        // note) without SMJ's per-round sorts.
+        nxt.join(cur.select(col("node"), col("label").as("__prev"))
+              .hint("shuffle_hash"),
+            nxt("dst") === col("node"))
+          .select(nxt("dst").as("node"), nxt("label"),
+                  (nxt("label") =!= col("__prev")).as("__chg"))
+      }
+      // Chunked fold with the synchronous-relabeling early stop: zero
+      // flagged rows in a chunk's last sweep means labels(t) ==
+      // labels(t-1), so every remaining sweep reproduces the frame —
+      // identical output, fewer chunks. The flag count is fused into
+      // each chunk pin's own materializing job.
+      Sweep.fold(init, iterations, Seq("node"), np,
+          Halt.NoneFlagged("__chg"))(step)
+        .select("node", "label")
     }
   }
 
@@ -381,7 +309,7 @@ object Graphs {
     * src partitioning declared; each sweep joins the reached-nodes
     * frame (≤ one row per node) against it co-located, aggregates
     * the neighbor minimum, and full-outer-merges with the previous
-    * distances. The reached frame is pinned per sweep
+    * distances. The reached frame is pinned per chunk
     * (partitioning-declared checkpoint) because each sweep reads it
     * twice (neighbor join + self merge) — unchecked, the lineage
     * doubles per sweep; undeclared, BOTH joins re-shuffled their
@@ -396,140 +324,8 @@ object Graphs {
               seeds: DataFrame, seedCol: String,
               maxHops: Int): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
-    // r21: fused-count pin + scale-adaptive partition count
-    val (sym, np, _) = pinEdgesAdaptive(
-      symmetrize(edges, aCol, bCol).distinct(), "src")
-    graft.ops.Sweep.withShufflePartitions(edges.sparkSession, np) {
-    val init = seeds.select(col(seedCol).as("node")).distinct()
-      .select(col("node"), lit(0L).as("hops"))
-    // the per-sweep distance frame is pinned on node: the neighbor
-    // join (src === node) and the self merge (node === dst) then BOTH
-    // co-locate against declared partitionings — no per-sweep
-    // re-exchange of either input (the checkpoint alone reported
-    // unknown partitioning and re-shuffled both)
-    val init0 = pin(init, "node")
-    def relaxMerge(dist: DataFrame): DataFrame = {
-      // hint("shuffle_hash") (r21; was "merge"): the co-located
-      // shuffle-keyed join this operator's layout is designed for —
-      // see [[kCore]]'s note on why a broadcast of the node frame
-      // both breaks at 100 TB and races the chunk's staged
-      // intermediates at small SF, and why shuffled-hash beats SMJ
-      // here (no per-sweep sort of the edge frame)
-      val relaxed = sym
-        .join(dist.hint("shuffle_hash"), col("src") === col("node"))
-        .groupBy("dst").agg((min(col("hops")) + 1L).as("__nh"))
-      // r22 (r21 verdict item 4 audit): the per-sweep merge was the
-      // last unhinted node×node sweep join — SMJ sorted both
-      // node-sized sides every sweep. Spark 4 SHJ supports FullOuter
-      // (build side tracks matched rows); both inputs are already
-      // co-located on the key, so only the sorts disappear.
-      dist
-        .join(relaxed.hint("shuffle_hash"),
-          col("node") === col("dst"), "full_outer")
-        .select(coalesce(col("node"), col("dst")).as("node"),
-                least(coalesce(col("hops"), col("__nh")),
-                      coalesce(col("__nh"), col("hops"))).as("hops"))
-    }
-    // Chunked pin cadence (r15 verdict): 2-3 sweeps per checkpoint
-    // with staged intermediates — see [[graft.ops.Sweep.foldPinned]]
-    graft.ops.Sweep.foldPinned(init0, maxHops, Seq("node"))(relaxMerge)
-    }
-  }
-
-  /** k-core peeling: repeatedly remove nodes of degree < k (and
-    * their incident edges) for a fixed `sweeps` budget — the dense
-    * subgraph extractor (spam rings, tightly-coupled entity
-    * clusters). A fixed sweep count is the same determinism choice
-    * as every other iterative operator here: the true k-core is the
-    * fixpoint, and each sweep only ever shrinks the graph, so any
-    * prefix is a sound over-approximation with a documented budget.
-    *
-    * Scale shape per sweep: the survivor frame is pinned on src
-    * (partitioning-declared checkpoint), so the degree aggregate is
-    * map-side and the src-endpoint semi-join co-locates for free; a
-    * node-sized keep frame (staged — it filters BOTH endpoints) and
-    * the dst-endpoint semi-join's re-key are the rest — the one
-    * inherent per-sweep edge exchange of degree peeling. Returns the
-    * surviving symmetric edge frame (src, dst) — callers aggregate
-    * degrees or membership from it.
-    */
-  def kCore(edges: DataFrame, aCol: String, bCol: String,
-            k: Int, sweeps: Int): DataFrame = {
-    require(k >= 1 && sweeps >= 1, "k and sweeps must be >= 1")
-    // pinCounted: the init edge count arms the integral early stop
-    // from the FIRST chunk (r16 verdict item 6) — the count rides the
-    // pin's own materializing job, no extra scheduler job. r21: the
-    // same count feeds the scale-adaptive partition count.
-    val (init, np, initEdges) =
-      pinEdgesAdaptive(symmetrize(edges, aCol, bCol).distinct(), "src")
-    // One peel: degree filter on both endpoints. On a frame laid out
-    // hash(src) the degree aggregate is map-side and the src-endpoint
-    // semi-join co-locates for free; the dst-endpoint semi-join re-keys
-    // the (shrinking) edge frame — the one inherent per-sweep edge
-    // exchange of degree peeling (both endpoints must be filtered, and
-    // they live under different keys).
-    def peel(e: DataFrame): DataFrame = {
-      // keep is consumed by BOTH semi-joins: seal it with a
-      // repartition EXCHANGE (node-sized) so ReuseExchange runs its
-      // build once and both joins read the same shuffle files — a
-      // persist here compiles an AQE cache child that spawns its own
-      // stage jobs inside the pin, and its narrow consumers raced to
-      // fill it (see Sweep.foldPinned's scaladoc)
-      val n = edges.sparkSession.conf
-        .get("spark.sql.shuffle.partitions").toInt
-      val keep = e.groupBy("src").agg(count(lit(1)).as("__deg"))
-          .filter(col("__deg") >= k).select(col("src").as("__keep"))
-          .repartition(n, col("__keep"))
-      // hint("shuffle_hash") (r21; was "merge"): unhinted, at small SF
-      // Spark would BROADCAST the node-sized keep frame — and under
-      // non-AQE every broadcast future of a chunk's plan starts
-      // building CONCURRENTLY, so the chunk's staged intermediates
-      // were computed by racing broadcast jobs before any cache
-      // partition landed (measured: q192 tasks 553->1039 under a
-      // 3-peel chunk). A shuffle-keyed join is the only kind that
-      // exists at 100 TB (a graph's node list does not broadcast);
-      // among those, shuffled-hash builds the NODE-sized keep side
-      // into a per-partition hash table and streams the edge frame
-      // UNSORTED, where the r16-r20 SMJ form sorted the 1.2M-row edge
-      // frame twice per peel (guide §3.1) — measured q192 isolated
-      // 9.4 -> 4.6-5.6 s at identical job/stage/task counts. The src
-      // side still co-locates for free against the declared hash(src)
-      // layout; build-side memory is nodes/partition. MEMORY NOTE
-      // (r22, r21 advice — verified against the bundled Spark 4.1.2
-      // jars): the SHJ build side does NOT spill — UnsafeHashedRelation
-      // grows a BytesToBytesMap and raises
-      // cannotAllocateMemoryToGrowBytesToBytesMapError when execution
-      // memory runs out (the r21 comment here overclaimed "spills").
-      // The actual safety argument at scale: the build side of every
-      // sweep join is the NODE-sized frame at the scale-adaptive
-      // partition count — per-task build state is nodes/np, sized by
-      // the same shuffle.partitions the cluster sizes every hash
-      // aggregate by — and the failure mode is a LOUD task OOM with
-      // SMJ one removed hint away, never a silent wrong result.
-      e.join(keep.hint("shuffle_hash"), col("src") === col("__keep"), "left_semi")
-        .join(keep.hint("shuffle_hash"), col("dst") === col("__keep"), "left_semi")
-    }
-    // Chunked pin cadence (r15 verdict — [[graft.ops.Sweep.foldPinned]]).
-    // Shuffle volume is unchanged vs pin-per-sweep: an intra-chunk
-    // peel's src-side exchange replaces the pin repartition the
-    // per-sweep shape paid. Degree aggregates over a staged (dst-keyed)
-    // intermediate are partial-aggregated map-side, so their exchanges
-    // stay node-sized; the staged frames themselves are edge-sized —
-    // the chunk cap (<= 3) bounds live caches to two edge frames.
-    // INTEGRAL EARLY STOP (r16 verdict item 6): peeling only SHRINKS
-    // the edge frame, so an unchanged pin row count across a chunk
-    // proves every remaining sweep is a no-op — the fixed budget stays
-    // the semantics (output identical), the post-fixpoint chunks'
-    // scheduler jobs disappear. The count is fused into each chunk
-    // pin's materializing job (withCount), job count per sweep
-    // unchanged.
-    graft.ops.Sweep.withShufflePartitions(edges.sparkSession, np) {
-      // numPartitions threaded EXPLICITLY (r21 advice: the parameter
-      // existed but every caller relied on the ambient conf — two
-      // sources of truth for the same knob)
-      graft.ops.Sweep.foldPinnedConverging(init, sweeps, Seq("src"),
-        initRows = Some(initEdges), numPartitions = Some(np))(peel)
-    }
+    minDistances(Sweep.symmetrize(edges, aCol, bCol).distinct(),
+      seeds, seedCol, maxHops, "hops", min(col("hops")) + 1L)
   }
 
   /** Single-source (or multi-source) shortest path over an undirected
@@ -543,38 +339,146 @@ object Graphs {
     * budget to be monotone.
     *
     * Same scale shape as [[bfsHops]] (staged adjacency repartitioned
-    * on the sweep key, per-sweep checkpoint, node-sized frames per
+    * on the sweep key, chunk checkpoints, node-sized frames per
     * sweep). Returns (node, dist).
     */
   def ssspWeighted(edges: DataFrame, aCol: String, bCol: String,
                    wCol: String, seeds: DataFrame, seedCol: String,
                    maxSweeps: Int): DataFrame = {
     require(maxSweeps >= 1, "maxSweeps must be >= 1")
-    // same per-sweep co-location shape as [[bfsHops]]; r21: fused
-    // count + scale-adaptive partition count
-    val (sym, np, _) = pinEdgesAdaptive(
-      symmetrizeW(edges, aCol, bCol, col(wCol).cast("long"))
+    minDistances(
+      Sweep.symmetrizeW(edges, aCol, bCol, col(wCol).cast("long"))
         .groupBy("src", "dst").agg(min("w").as("w")), // parallel edges: keep cheapest
-      "src")
-    graft.ops.Sweep.withShufflePartitions(edges.sparkSession, np) {
-    val init = seeds.select(col(seedCol).as("node")).distinct()
-      .select(col("node"), lit(0L).as("dist"))
-    val init0 = pin(init, "node")
-    def relaxMerge(dist: DataFrame): DataFrame = {
-      // hint("shuffle_hash") — see [[bfsHops]]
-      val relaxed = sym
-        .join(dist.hint("shuffle_hash"), col("src") === col("node"))
-        .groupBy("dst").agg(min(col("dist") + col("w")).as("__nd"))
-      // r22: shuffled-hash full-outer merge — see [[bfsHops]]
-      dist
-        .join(relaxed.hint("shuffle_hash"),
-          col("node") === col("dst"), "full_outer")
-        .select(coalesce(col("node"), col("dst")).as("node"),
-                least(coalesce(col("dist"), col("__nd")),
-                      coalesce(col("__nd"), col("dist"))).as("dist"))
+      seeds, seedCol, maxSweeps, "dist", min(col("dist") + col("w")))
+  }
+
+  /** The relaxation shared by [[bfsHops]] and [[ssspWeighted]]: seeds
+    * start at 0 in column `d`, and every sweep merges in `relax`, the
+    * neighbor aggregate over symmetric edges ⋈ distances. */
+  private def minDistances(edges: DataFrame, seeds: DataFrame,
+                           seedCol: String, sweeps: Int, d: String,
+                           relax: Column): DataFrame =
+    Sweep.edgeScope(edges, "src") { (sym, np, _) =>
+      // the per-sweep distance frame is pinned on node: the neighbor
+      // join (src === node) and the self merge (node === dst) then BOTH
+      // co-locate against declared partitionings — no per-sweep
+      // re-exchange of either input (the checkpoint alone reported
+      // unknown partitioning and re-shuffled both)
+      val init = Sweep.pin(seeds.select(col(seedCol).as("node")).distinct()
+        .select(col("node"), lit(0L).as(d)), Seq("node"), np)._1
+      def relaxMerge(dist: DataFrame): DataFrame = {
+        // hint("shuffle_hash") (r21; was "merge"): the co-located
+        // shuffle-keyed join this operator's layout is designed for —
+        // see [[kCore]]'s note on why a broadcast of the node frame
+        // both breaks at 100 TB and races the chunk's sealed
+        // intermediates at small SF, and why shuffled-hash beats SMJ
+        // here (no per-sweep sort of the edge frame)
+        val relaxed = sym
+          .join(dist.hint("shuffle_hash"), col("src") === col("node"))
+          .groupBy("dst").agg(relax.as("__nd"))
+        // r22 (r21 verdict item 4 audit): the per-sweep merge was the
+        // last unhinted node×node sweep join — SMJ sorted both
+        // node-sized sides every sweep. Spark 4 SHJ supports FullOuter
+        // (build side tracks matched rows); both inputs are already
+        // co-located on the key, so only the sorts disappear.
+        dist
+          .join(relaxed.hint("shuffle_hash"),
+            col("node") === col("dst"), "full_outer")
+          .select(coalesce(col("node"), col("dst")).as("node"),
+                  least(coalesce(col(d), col("__nd")),
+                        coalesce(col("__nd"), col(d))).as(d))
+      }
+      // Chunked pin cadence (r15 verdict): 2-3 sweeps per checkpoint
+      // with sealed intermediates — see [[Sweep.fold]]
+      Sweep.fold(init, sweeps, Seq("node"), np)(relaxMerge)
     }
-    // chunked pin cadence — see [[graft.ops.Sweep.foldPinned]]
-    graft.ops.Sweep.foldPinned(init0, maxSweeps, Seq("node"))(relaxMerge)
+
+  /** k-core peeling: repeatedly remove nodes of degree < k (and
+    * their incident edges) for a fixed `sweeps` budget — the dense
+    * subgraph extractor (spam rings, tightly-coupled entity
+    * clusters). A fixed sweep count is the same determinism choice
+    * as every other iterative operator here: the true k-core is the
+    * fixpoint, and each sweep only ever shrinks the graph, so any
+    * prefix is a sound over-approximation with a documented budget.
+    *
+    * Scale shape per sweep: the survivor frame is pinned on src
+    * (partitioning-declared checkpoint), so the degree aggregate is
+    * map-side and the src-endpoint semi-join co-locates for free; a
+    * node-sized keep frame (sealed — it filters BOTH endpoints) and
+    * the dst-endpoint semi-join's re-key are the rest — the one
+    * inherent per-sweep edge exchange of degree peeling. Returns the
+    * surviving symmetric edge frame (src, dst) — callers aggregate
+    * degrees or membership from it.
+    */
+  def kCore(edges: DataFrame, aCol: String, bCol: String,
+            k: Int, sweeps: Int): DataFrame = {
+    require(k >= 1 && sweeps >= 1, "k and sweeps must be >= 1")
+    // the edge scope's fused count is the init edge count: it arms the
+    // integral early stop from the FIRST chunk (r16 verdict item 6) —
+    // the count rides the pin's own materializing job, no extra
+    // scheduler job. r21: the same count feeds the scale-adaptive
+    // partition count.
+    Sweep.edgeScope(Sweep.symmetrize(edges, aCol, bCol).distinct(), "src") {
+        (init, np, initEdges) =>
+      // One peel: degree filter on both endpoints. On a frame laid out
+      // hash(src) the degree aggregate is map-side and the src-endpoint
+      // semi-join co-locates for free; the dst-endpoint semi-join re-keys
+      // the (shrinking) edge frame — the one inherent per-sweep edge
+      // exchange of degree peeling (both endpoints must be filtered, and
+      // they live under different keys).
+      def peel(e: DataFrame): DataFrame = {
+        // keep is consumed by BOTH semi-joins: seal it with a
+        // repartition EXCHANGE (node-sized) so ReuseExchange runs its
+        // build once and both joins read the same shuffle files — a
+        // persist here compiles an AQE cache child that spawns its own
+        // stage jobs inside the pin, and its narrow consumers raced to
+        // fill it (see Sweep.fold's seal note)
+        val keep = e.groupBy("src").agg(count(lit(1)).as("__deg"))
+            .filter(col("__deg") >= k).select(col("src").as("__keep"))
+            .repartition(np, col("__keep"))
+        // hint("shuffle_hash") (r21; was "merge"): unhinted, at small SF
+        // Spark would BROADCAST the node-sized keep frame — and under
+        // non-AQE every broadcast future of a chunk's plan starts
+        // building CONCURRENTLY, so the chunk's staged intermediates
+        // were computed by racing broadcast jobs before any cache
+        // partition landed (measured: q192 tasks 553->1039 under a
+        // 3-peel chunk). A shuffle-keyed join is the only kind that
+        // exists at 100 TB (a graph's node list does not broadcast);
+        // among those, shuffled-hash builds the NODE-sized keep side
+        // into a per-partition hash table and streams the edge frame
+        // UNSORTED, where the r16-r20 SMJ form sorted the 1.2M-row edge
+        // frame twice per peel — measured q192 isolated
+        // 9.4 -> 4.6-5.6 s at identical job/stage/task counts. The src
+        // side still co-locates for free against the declared hash(src)
+        // layout; build-side memory is nodes/partition. MEMORY NOTE
+        // (r22, r21 advice — verified against the bundled Spark 4.1.2
+        // jars): the SHJ build side does NOT spill — UnsafeHashedRelation
+        // grows a BytesToBytesMap and raises
+        // cannotAllocateMemoryToGrowBytesToBytesMapError when execution
+        // memory runs out (the r21 comment here overclaimed "spills").
+        // The actual safety argument at scale: the build side of every
+        // sweep join is the NODE-sized frame at the scale-adaptive
+        // partition count — per-task build state is nodes/np, sized by
+        // the same shuffle.partitions the cluster sizes every hash
+        // aggregate by — and the failure mode is a LOUD task OOM with
+        // SMJ one removed hint away, never a silent wrong result.
+        e.join(keep.hint("shuffle_hash"), col("src") === col("__keep"), "left_semi")
+          .join(keep.hint("shuffle_hash"), col("dst") === col("__keep"), "left_semi")
+      }
+      // Chunked pin cadence (r15 verdict — [[Sweep.fold]]). Shuffle
+      // volume is unchanged vs pin-per-sweep: an intra-chunk peel's
+      // src-side exchange replaces the pin repartition the per-sweep
+      // shape paid. Degree aggregates over a sealed (dst-keyed)
+      // intermediate are partial-aggregated map-side, so their
+      // exchanges stay node-sized.
+      // INTEGRAL EARLY STOP (r16 verdict item 6): peeling only SHRINKS
+      // the edge frame, so an unchanged pin row count across a chunk
+      // proves every remaining sweep is a no-op — the fixed budget stays
+      // the semantics (output identical), the post-fixpoint chunks'
+      // scheduler jobs disappear. The count is fused into each chunk
+      // pin's materializing job, job count per sweep unchanged.
+      Sweep.fold(init, sweeps, Seq("src"), np,
+        Halt.RowsUnchanged(initEdges))(peel)
     }
   }
 
@@ -590,8 +494,8 @@ object Graphs {
     * the IEEE subtraction).
     *
     * Scale shape per sweep (r13: every shared frame is a
-    * partitioning-declared checkpoint — see [[pin]] — so the mass
-    * join, the node left-join and the final degree join all
+    * partitioning-declared checkpoint — see [[Sweep.pin]] — so the
+    * mass join, the node left-join and the final degree join all
     * co-locate with no edge-frame re-exchange): one co-located join
     * of the rank frame against the out-degree adjacency feeding the
     * mass aggregate, one co-located left join back to the node
@@ -607,83 +511,14 @@ object Graphs {
     * (node, out_degree, pr).
     */
   def pageRankDirected(edges: DataFrame, srcCol: String, dstCol: String,
-                       iterations: Int = 3, damping: Double = 0.85): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    // directed: no symmetrization, but the same staging discipline as
-    // [[pageRank]] — partitioning-declared checkpoints (pin) so no
-    // sweep re-exchanges the edge frame, node set in ONE pass over
-    // dir (explode, not a two-scan union), driver-side N. r21: dir's
-    // pin count feeds the scale-adaptive partition count.
-    val (dir, np, _) = pinEdgesAdaptive(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct(),
-      "src")
-    graft.ops.Sweep.withShufflePartitions(edges.sparkSession, np) {
-    val nodes = dir
-      .select(explode(array(col("src"), col("dst"))).as("node")).distinct()
-    val outdeg = pin(dir.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-    val adj = pin(dir.join(outdeg, "src"), "src")
-    // the dangling SET is static — only its mass changes per sweep —
-    // so the flag is computed once and rides the rank frame through
-    // every checkpoint; D then needs no per-sweep join at all
-    val (nodesF, nRows) = pinCounted(
-      nodes.join(outdeg.hint("shuffle_hash"),
-          col("node") === col("src"), "left")
-        .select(col("node"), col("src").isNull.as("__dang")),
-      "node")
-    val n = nRows.toDouble
-    val init = nodesF
-      .select(col("node"), col("__dang"), lit(1.0 / n).as("pr"))
-    // Each sweep references the prior rank frame twice (the D
-    // filter-aggregate and the mass join), so a lazy lineage
-    // compounds per iteration — periodic eager localCheckpoints (the
-    // CC-sweep idiom) bound the plan; superseded checkpoints are
-    // dropped once the successor exists. Since r16 the cadence is TWO
-    // sweeps per checkpoint (r15 verdict): the pair's intermediate
-    // rank frame is sealed with a repartition(n, node) exchange
-    // (foldPinned), so its consumers share one exchange subtree that
-    // ReuseExchange collapses — the sweep is computed once, read from
-    // shuffle files by every consumer, and half the pin jobs
-    // disappear. init itself is NOT
-    // pinned any more: it is a map-side projection of the pinned
-    // nodesF, so re-evaluating it costs a checkpoint scan — the r14
-    // shape paid a whole checkpoint job to avoid that scan.
-    def sweep(prS: DataFrame): DataFrame = {
-      // the one per-sweep broadcast scalar: D is a conditional
-      // aggregate over the UNFILTERED rank frame (the static __dang
-      // flag replaces the per-sweep anti-join and its nested outdeg
-      // broadcast; N is a driver literal since r13). sum(when(dang,
-      // pr)) — not filter(dang).agg(sum(pr)) — because Catalyst
-      // pushes a filter below foldPinned's repartition seal, giving
-      // this branch a DIFFERENT exchange child than the mass join's
-      // and defeating ReuseExchange (the intra-chunk sweep would be
-      // recomputed once per consumer, r16 advice). sum() skips nulls,
-      // so the addend sequence is the same pr values the filter
-      // summed — every IEEE value (and the oracle replay) is
-      // bit-identical.
-      val consts = prS
-        .agg(coalesce(sum(when(col("__dang"), col("pr"))), lit(0.0))
-          .as("__dm"))
-      // r22 (r21 verdict item 4): the dangling left join and the
-      // terminal outdeg join below get the same shuffled-hash hint as
-      // the inner mass join — node-sized build sides, both inputs
-      // already co-located on the key, SMJ only added per-sweep sorts
-      nodesF.join(
-          adj.join(prS.hint("shuffle_hash"), col("src") === col("node"))
-            .groupBy("dst").agg(sum(col("pr") / col("deg")).as("__mass"))
-            .hint("shuffle_hash"),
-          col("node") === col("dst"), "left")
-        .crossJoin(broadcast(consts))
-        .select(col("node"), col("__dang"),
-          (lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("__mass"), lit(0.0)) +
-              col("__dm") / lit(n))).as("pr"))
-    }
-    graft.ops.Sweep.foldPinned(init, iterations, Seq("node"))(sweep)
-      .join(outdeg.hint("shuffle_hash"), col("node") === col("src"), "left")
+                       iterations: Int = 3, damping: Double = 0.85): DataFrame =
+    directedPageRank(edges, srcCol, dstCol, iterations, None)(
+      n => lit(1.0 / n),
+      n => lit((1.0 - damping) / n) +
+        lit(damping) * (coalesce(col("__mass"), lit(0.0)) +
+          col("__dm") / lit(n)))
       .select(col("node"), coalesce(col("deg"), lit(0L)).as("out_degree"),
               col("pr"))
-    }
-  }
 
   /** PERSONALIZED PageRank (random walk with restart to a SEED set —
     * Page et al. 1999 §6 / Jeh & Widom 2003): [[pageRankDirected]]
@@ -693,8 +528,9 @@ object Graphs {
     * to the seed set — the recommendation / related-entity primitive
     * (seeds = a user's items, a nation's suppliers, a topic's docs).
     * `seeds` is a one-column frame of node ids; only seeds present
-    * in the graph carry restart mass (|S| counts the intersection),
-    * and an empty intersection is refused loudly.
+    * in the graph carry restart mass (|S| counts the intersection,
+    * fused into the node-flag pin's own job), and an empty
+    * intersection is refused loudly.
     *
     * Same sweep scale shape, staging discipline and determinism
     * contract as [[pageRankDirected]] (static seed/dangling flags
@@ -704,58 +540,113 @@ object Graphs {
     * the same division). Returns (node, is_seed, out_degree, pr). */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, iterations: Int = 3,
-                           damping: Double = 0.85): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    // r21: fused-count pin + scale-adaptive partition count
-    val (dir, np, _) = pinEdgesAdaptive(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct(),
-      "src")
-    graft.ops.Sweep.withShufflePartitions(edges.sparkSession, np) {
-    val nodes = dir
-      .select(explode(array(col("src"), col("dst"))).as("node")).distinct()
-    val outdeg = pin(dir.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-    val adj = pin(dir.join(outdeg, "src"), "src")
-    val seedSet = seeds
-      .select(col(seeds.columns.head).as("__sn")).distinct()
-    // both static per-node flags (dangling, seed) stamped once; they
-    // ride the rank frame through every checkpoint
-    val (nodesF, _) = pinCounted(
-      nodes.join(outdeg.hint("shuffle_hash"),
-          col("node") === col("src"), "left")
-        .join(seedSet.hint("shuffle_hash"),
-          col("node") === col("__sn"), "left")
-        .select(col("node"), col("src").isNull.as("__dang"),
-                col("__sn").isNotNull.as("__seed")),
-      "node")
-    // |S| over the graph-intersected seed set: one count on the pin
-    val sCount = nodesF.filter(col("__seed")).count().toDouble
-    require(sCount > 0, "seed set does not intersect the graph")
-    val init = nodesF.select(col("node"), col("__dang"), col("__seed"),
-      when(col("__seed"), lit(1.0 / sCount)).otherwise(lit(0.0)).as("pr"))
-    def sweep(prS: DataFrame): DataFrame = {
-      // D via sum(when(...)) over the UNFILTERED sealed frame — the
-      // pageRankDirected exchange-reuse rule
-      val consts = prS
-        .agg(coalesce(sum(when(col("__dang"), col("pr"))), lit(0.0))
-          .as("__dm"))
-      // r22: shuffled-hash on the dangling left join and the terminal
-      // outdeg join below — the pageRankDirected completion
-      nodesF.join(
-          adj.join(prS.hint("shuffle_hash"), col("src") === col("node"))
-            .groupBy("dst").agg(sum(col("pr") / col("deg")).as("__mass"))
-            .hint("shuffle_hash"),
-          col("node") === col("dst"), "left")
-        .crossJoin(broadcast(consts))
-        .select(col("node"), col("__dang"), col("__seed"),
-          (when(col("__seed"),
-              (lit(1 - damping) + lit(damping) * col("__dm")) / lit(sCount))
-            .otherwise(lit(0.0)) +
-           lit(damping) * coalesce(col("__mass"), lit(0.0))).as("pr"))
-    }
-    graft.ops.Sweep.foldPinned(init, iterations, Seq("node"))(sweep)
-      .join(outdeg.hint("shuffle_hash"), col("node") === col("src"), "left")
+                           damping: Double = 0.85): DataFrame =
+    directedPageRank(edges, srcCol, dstCol, iterations, Some(seeds))({ s =>
+      require(s > 0, "seed set does not intersect the graph")
+      when(col("__seed"), lit(1.0 / s)).otherwise(lit(0.0))
+    }, s =>
+      when(col("__seed"),
+          (lit(1 - damping) + lit(damping) * col("__dm")) / lit(s))
+        .otherwise(lit(0.0)) +
+        lit(damping) * coalesce(col("__mass"), lit(0.0)))
       .select(col("node"), col("__seed").as("is_seed"),
               coalesce(col("deg"), lit(0L)).as("out_degree"), col("pr"))
+
+  /** Prelude and sweep shared by [[pageRankDirected]] and
+    * [[personalizedPageRank]]: out-degree, adjacency and node-flag
+    * pins, then the chunked fold. The node frame carries the static
+    * flags (`__dang`, plus `__seed` when `seeds` is given); its pin
+    * counts all nodes (N) or, with seeds, the seed nodes (|S|). `init`
+    * and `rank` map that count to the start rank and to the
+    * per-sweep update over `__mass` (inflow) and `__dm` (dangling
+    * mass) — the teleport rule is the only difference between the
+    * two operators. Returns the folded ranks left-joined to the
+    * out-degree table (node, flags..., pr, src, deg). */
+  private def directedPageRank(edges: DataFrame, srcCol: String,
+                               dstCol: String, iterations: Int,
+                               seeds: Option[DataFrame])
+                              (init: Double => Column,
+                               rank: Double => Column): DataFrame = {
+    require(iterations >= 1, "iterations must be >= 1")
+    // directed: no symmetrization, but the same staging discipline as
+    // [[pageRank]] — partitioning-declared checkpoints (pin) so no
+    // sweep re-exchanges the edge frame, node set in ONE pass over
+    // dir (explode, not a two-scan union), driver-side N. r21: dir's
+    // pin count feeds the scale-adaptive partition count.
+    Sweep.edgeScope(
+        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct(),
+        "src") { (dir, np, _) =>
+      val nodes = dir
+        .select(explode(array(col("src"), col("dst"))).as("node")).distinct()
+      val outdeg = Sweep.pin(
+        dir.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src"), np)._1
+      val adj = Sweep.pin(dir.join(outdeg, "src"), Seq("src"), np)._1
+      // the dangling SET is static — only its mass changes per sweep —
+      // so the flag is computed once and rides the rank frame through
+      // every checkpoint; D then needs no per-sweep join at all
+      val flagged = nodes.join(outdeg.hint("shuffle_hash"),
+        col("node") === col("src"), "left")
+      val dang = col("src").isNull.as("__dang")
+      val (nodesF, cnt) = seeds match {
+        case None =>
+          Sweep.pin(flagged.select(col("node"), dang), Seq("node"), np)
+        case Some(s) =>
+          // the seed flag is static too; |S| (seeds present in the
+          // graph) is the pin's flagged-row count, from the same job
+          val seedSet = s.select(col(s.columns.head).as("__sn")).distinct()
+          Sweep.pin(
+            flagged.join(seedSet.hint("shuffle_hash"),
+                col("node") === col("__sn"), "left")
+              .select(col("node"), dang, col("__sn").isNotNull.as("__seed")),
+            Seq("node"), np, Some("__seed"))
+      }
+      val c = cnt.toDouble
+      val flags = nodesF.columns.toSeq.map(col)
+      // Each sweep references the prior rank frame twice (the D
+      // filter-aggregate and the mass join), so a lazy lineage
+      // compounds per iteration — periodic eager checkpoints (the
+      // CC-sweep idiom) bound the plan; superseded checkpoints are
+      // dropped once the successor exists. Since r16 the cadence is TWO
+      // sweeps per checkpoint (r15 verdict): the pair's intermediate
+      // rank frame is sealed with a repartition(np, node) exchange
+      // ([[Sweep.fold]]), so its consumers share one exchange subtree
+      // that ReuseExchange collapses — the sweep is computed once, read
+      // from shuffle files by every consumer, and half the pin jobs
+      // disappear. init itself is NOT pinned: it is a map-side
+      // projection of the pinned nodesF, so re-evaluating it costs a
+      // checkpoint scan — the r14 shape paid a whole checkpoint job to
+      // avoid that scan.
+      def sweep(prS: DataFrame): DataFrame = {
+        // the one per-sweep broadcast scalar: D is a conditional
+        // aggregate over the UNFILTERED rank frame (the static __dang
+        // flag replaces the per-sweep anti-join and its nested outdeg
+        // broadcast; N is a driver literal since r13). sum(when(dang,
+        // pr)) — not filter(dang).agg(sum(pr)) — because Catalyst
+        // pushes a filter below the fold's repartition seal, giving
+        // this branch a DIFFERENT exchange child than the mass join's
+        // and defeating ReuseExchange (the intra-chunk sweep would be
+        // recomputed once per consumer, r16 advice). sum() skips nulls,
+        // so the addend sequence is the same pr values the filter
+        // summed — every IEEE value (and the oracle replay) is
+        // bit-identical.
+        val consts = prS
+          .agg(coalesce(sum(when(col("__dang"), col("pr"))), lit(0.0))
+            .as("__dm"))
+        // r22 (r21 verdict item 4): the dangling left join and the
+        // terminal outdeg join below get the same shuffled-hash hint as
+        // the inner mass join — node-sized build sides, both inputs
+        // already co-located on the key, SMJ only added per-sweep sorts
+        nodesF.join(
+            adj.join(prS.hint("shuffle_hash"), col("src") === col("node"))
+              .groupBy("dst").agg(sum(col("pr") / col("deg")).as("__mass"))
+              .hint("shuffle_hash"),
+            col("node") === col("dst"), "left")
+          .crossJoin(broadcast(consts))
+          .select(flags :+ rank(c).as("pr"): _*)
+      }
+      Sweep.fold(nodesF.select(flags :+ init(c).as("pr"): _*),
+          iterations, Seq("node"), np)(sweep)
+        .join(outdeg.hint("shuffle_hash"), col("node") === col("src"), "left")
     }
   }
 
@@ -867,71 +758,69 @@ object Graphs {
                       sweeps: Int): DataFrame = {
     require(sweeps >= 1, "sweeps must be >= 1")
     val sp = edges.sparkSession
-    // r21: fused-count pin + scale-adaptive partition count
-    val (sym, np, _) = pinEdgesAdaptive(
-      symmetrize(edges, aCol, bCol).distinct(), "src")
-    graft.ops.Sweep.withShufflePartitions(sp, np) {
-    val gCols = (0 until HbLongs).map(k => s"g$k")
-    val init = pin(
-      sym.select(col("src").as("node")).distinct()
-        .withColumn("bucket",
-          expr("CAST(conv(substring(md5(node), 1, 2), 16, 10) AS INT) % 64"))
-        .withColumn("w",
-          expr("CAST(conv(substring(md5(node), 3, 11), 16, 10) AS BIGINT)"))
-        .withColumn("rho",
-          expr("CASE WHEN w = 0 THEN 45 " +
-            "ELSE CAST(45 - length(bin(w)) AS INT) END"))
-        .select(col("node") +: (0 until HbLongs).map(k =>
-          expr(s"CASE WHEN bucket div 8 = $k THEN " +
-            "shiftleft(CAST(rho AS BIGINT), (7 - bucket % 8) * 8) " +
-            "ELSE CAST(0 AS BIGINT) END").as(s"g$k")): _*),
-      "node")
-    val seedNodes = seeds.select(col(seedCol).as("node")).distinct()
-    def census(reg: DataFrame, t: Int): DataFrame =
-      reg.join(seedNodes, Seq("node"), "left_semi")
-        .select((0 until HbRegs).map(j =>
-          expr(hbUnpackText(j)).as(s"r$j")): _*)
-        .select(expr(HbSIntText).as("s_int"), expr(HbZerosText).as("zeros"))
-        .select(expr(HbEstMilliText).as("est_milli"))
-        .agg(count(lit(1)).as("n_seeds"), sum("est_milli").as("nf_est_milli"))
-        .select(lit(t.toLong).as("t"), col("n_seeds"), col("nf_est_milli"))
-    def advance(reg: DataFrame): DataFrame = {
-      val relaxed = sym.join(reg.hint("shuffle_hash"), col("src") === col("node"))
-        .groupBy("dst")
-        .agg(graft.functions.GraftFunctions
-            .bytes8MaxAgg(sp, col(gCols.head)).as(s"m_${gCols.head}"),
-          gCols.tail.map(c => graft.functions.GraftFunctions
-            .bytes8MaxAgg(sp, col(c)).as(s"m_$c")): _*)
-      // left + coalesce: every node here has degree >= 1 under the
-      // symmetric edge set, but the merge shape stays total.
-      // r22: shuffled-hash (r21 verdict item 4 audit) — the register
-      // merge was an unhinted node×node SMJ sorting both 8-long-wide
-      // node frames every sweep; both sides are co-located on the key
-      reg.join(relaxed.hint("shuffle_hash"),
-          col("node") === col("dst"), "left")
-        .select(col("node") +: gCols.map(c =>
-          graft.functions.GraftFunctions
-            .bytes8Max(sp, col(c), coalesce(col(s"m_$c"), lit(0L)))
-            .as(c)): _*)
-    }
-    // per-sweep pin cadence: each generation is checkpointed so the
-    // per-t censuses (all consumed by ONE union action at the end)
-    // read materialized state instead of re-deriving sweep chains;
-    // the node-sized generations stay registered with Staging and
-    // release after the query's action, the pin convention
-    var cur = init
-    var all = census(init, 0)
-    for (t <- 1 to sweeps) {
-      cur = pin(advance(cur), "node")
-      all = all.unionByName(census(cur, t))
-    }
-    val staged = graft.ops.Staging.stage(all)
-    val fin = staged.filter(col("t") === sweeps.toLong)
-      .select(col("nf_est_milli").as("__fin"))
-    staged.crossJoin(broadcast(fin))
-      .select(col("t"), col("n_seeds"), col("nf_est_milli"),
-        expr("(nf_est_milli * 1000000) div __fin").as("ratio_vs_final_ppm"))
-      .orderBy("t")
+    Sweep.edgeScope(Sweep.symmetrize(edges, aCol, bCol).distinct(), "src") {
+        (sym, np, _) =>
+      val gCols = (0 until HbLongs).map(k => s"g$k")
+      val init = Sweep.pin(
+        sym.select(col("src").as("node")).distinct()
+          .withColumn("bucket",
+            expr("CAST(conv(substring(md5(node), 1, 2), 16, 10) AS INT) % 64"))
+          .withColumn("w",
+            expr("CAST(conv(substring(md5(node), 3, 11), 16, 10) AS BIGINT)"))
+          .withColumn("rho",
+            expr("CASE WHEN w = 0 THEN 45 " +
+              "ELSE CAST(45 - length(bin(w)) AS INT) END"))
+          .select(col("node") +: (0 until HbLongs).map(k =>
+            expr(s"CASE WHEN bucket div 8 = $k THEN " +
+              "shiftleft(CAST(rho AS BIGINT), (7 - bucket % 8) * 8) " +
+              "ELSE CAST(0 AS BIGINT) END").as(s"g$k")): _*),
+        Seq("node"), np)._1
+      val seedNodes = seeds.select(col(seedCol).as("node")).distinct()
+      def census(reg: DataFrame, t: Int): DataFrame =
+        reg.join(seedNodes, Seq("node"), "left_semi")
+          .select((0 until HbRegs).map(j =>
+            expr(hbUnpackText(j)).as(s"r$j")): _*)
+          .select(expr(HbSIntText).as("s_int"), expr(HbZerosText).as("zeros"))
+          .select(expr(HbEstMilliText).as("est_milli"))
+          .agg(count(lit(1)).as("n_seeds"), sum("est_milli").as("nf_est_milli"))
+          .select(lit(t.toLong).as("t"), col("n_seeds"), col("nf_est_milli"))
+      def advance(reg: DataFrame): DataFrame = {
+        val relaxed = sym.join(reg.hint("shuffle_hash"), col("src") === col("node"))
+          .groupBy("dst")
+          .agg(graft.functions.GraftFunctions
+              .bytes8MaxAgg(sp, col(gCols.head)).as(s"m_${gCols.head}"),
+            gCols.tail.map(c => graft.functions.GraftFunctions
+              .bytes8MaxAgg(sp, col(c)).as(s"m_$c")): _*)
+        // left + coalesce: every node here has degree >= 1 under the
+        // symmetric edge set, but the merge shape stays total.
+        // r22: shuffled-hash (r21 verdict item 4 audit) — the register
+        // merge was an unhinted node×node SMJ sorting both 8-long-wide
+        // node frames every sweep; both sides are co-located on the key
+        reg.join(relaxed.hint("shuffle_hash"),
+            col("node") === col("dst"), "left")
+          .select(col("node") +: gCols.map(c =>
+            graft.functions.GraftFunctions
+              .bytes8Max(sp, col(c), coalesce(col(s"m_$c"), lit(0L)))
+              .as(c)): _*)
+      }
+      // per-sweep pin cadence: each generation is checkpointed so the
+      // per-t censuses (all consumed by ONE union action at the end)
+      // read materialized state instead of re-deriving sweep chains;
+      // the node-sized generations stay registered with Staging and
+      // release after the query's action, the pin convention
+      var cur = init
+      var all = census(init, 0)
+      for (t <- 1 to sweeps) {
+        cur = Sweep.pin(advance(cur), Seq("node"), np)._1
+        all = all.unionByName(census(cur, t))
+      }
+      val staged = graft.ops.Staging.stage(all)
+      val fin = staged.filter(col("t") === sweeps.toLong)
+        .select(col("nf_est_milli").as("__fin"))
+      staged.crossJoin(broadcast(fin))
+        .select(col("t"), col("n_seeds"), col("nf_est_milli"),
+          expr("(nf_est_milli * 1000000) div __fin").as("ratio_vs_final_ppm"))
+        .orderBy("t")
     }
   }
 }

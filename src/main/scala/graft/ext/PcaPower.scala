@@ -65,7 +65,7 @@ object PcaPower {
     // compounding per step (measured: 77 scheduler jobs / 1441 tasks
     // for steps = 3 at sf0.1); a lazy persist() still let the terminal
     // action's concurrent broadcast futures RACE to fill the caches
-    // (the Sweep.foldPinned hazard — measured 0.7 s × 4 redundant
+    // (the Sweep.fold seal hazard — measured 0.7 s × 4 redundant
     // fills). localCheckpoint(true) computes each d-row frame exactly
     // once, values bit-identical; the frames are d rows regardless of
     // corpus size, so the checkpoint is free at any scale.

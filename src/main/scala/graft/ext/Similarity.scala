@@ -29,8 +29,6 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cast array<float> to array<double> for numerically-stable math. */
   def asDouble(a: Column): Column = transform(a, x => x.cast("double"))
 

@@ -43,14 +43,6 @@ object Kernels {
       .drop("__rn")
   }
 
-  /** Top-n rows per key group (generalizes dedupKeepLast). */
-  def topNPerGroup(df: DataFrame, keys: Seq[String], order: Seq[Column], n: Int): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= n)
-      .drop("__rn")
-  }
-
   /** Global top-k: `orderBy(order).limit(k)`. Catalyst plans this as
     * TakeOrderedAndProject — per-partition heaps + a k-row merge on the
     * driver, never a full sort (reference's `rank()` does sort+head,

@@ -53,21 +53,6 @@ object FinComposite {
 
   private val cache = TrieMap.empty[(SparkSession, String), (FinData, Company)]
 
-  /** Drop a memoized FinData and unpersist its cached frames — the
-    * eviction path for embedding applications (the driver contract
-    * itself never needs it: one (session, dir) pair per run, released
-    * with the session). Addresses the round-2 note that the TrieMap
-    * held MEMORY_AND_DISK frames for the JVM lifetime with no way out.
-    */
-  def invalidate(s: SparkSession, dir: String): Unit =
-    cache.remove((s, dir)).foreach { case (data, company) =>
-      company.df.unpersist(blocking = false)
-      data.financials.unpersist(blocking = false)
-      data.trades.unpersist(blocking = false)
-      data.language.unpersist(blocking = false)
-      data.indicators.unpersist(blocking = false)
-    }
-
   /** Build (and memoize per session+dir) the mapped FinData and the
     * Company view — the four queries share one load. */
   def mapped(s: SparkSession, dir: String): (FinData, Company) =

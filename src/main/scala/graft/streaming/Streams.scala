@@ -29,15 +29,6 @@ object Streams {
       .select(col("window.start").as("win_start"), col("event_type"),
               col("n_events"), col("total_value"))
 
-  /** Sliding windows (length/slide), watermarked. */
-  def slidingCounts(events: DataFrame, length: String = "2 hours",
-                    slide: String = "1 hour", watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), length, slide), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("n_events"))
-
   /** Native session windows: 30-min inactivity gap per user — the
     * streaming form of EventQueries.q23 (which computes the same
     * sessions in batch with lag/cumsum). */

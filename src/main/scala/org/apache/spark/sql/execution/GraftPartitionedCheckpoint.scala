@@ -135,14 +135,14 @@ object GraftPinStrategy extends SparkStrategy {
   * exact shuffle staging exists to avoid, and at 100 TB the dominant
   * per-sweep cost.
   *
-  * This shim lives in Spark's execution package to reach the
-  * package-private [[LogicalRDD]]: it repartitions on the keys with
-  * an EXPLICIT partition count (a user-specified count is never
-  * coalesced by AQE, so the physical layout is exactly
-  * `HashPartitioning(keys, n)`), checkpoints eagerly, and rebuilds
-  * the scan as a [[GraftPinnedRDD]] with that partitioning DECLARED
-  * (and with canonicalization LogicalRDD lacks — see its scaladoc).
-  * The declaration is sound by construction — it only ever states the
+  * This object lives in Spark's execution package to reach the
+  * internals it needs: it repartitions on the keys with an EXPLICIT
+  * partition count (a user-specified count is never coalesced by AQE,
+  * so the physical layout is exactly `HashPartitioning(keys, n)`),
+  * checkpoints at the RDD level, and scans the checkpoint as a
+  * [[GraftPinnedRDD]] with that partitioning DECLARED (and with the
+  * canonicalization LogicalRDD lacks — see its scaladoc). The
+  * declaration is sound by construction — it only ever states the
   * partitioning the repartition in the same call just produced
   * (mis-declaring a partitioning would silently mis-join, which is
   * why the repartition is fused into this helper rather than taken on
@@ -153,100 +153,64 @@ object GraftPinStrategy extends SparkStrategy {
 object GraftPartitionedCheckpoint {
 
   /** `df` eagerly checkpointed with layout AND declared partitioning
-    * `HashPartitioning(keys, numPartitions)`. The checkpoint's blocks
-    * are the caller's to release (see
-    * [[graft.ops.Staging.stageCheckpoint]]). */
-  def apply(df: DataFrame, keys: Seq[String], numPartitions: Int): DataFrame = {
-    // BEFORE any work: an empty key list must fail here, not in the
-    // post-materialization declaration — by then a full checkpoint
-    // job has run and its blocks are cached but never registered for
-    // release (callers stage only on successful return)
-    require(keys.nonEmpty, "need at least one key")
-    require(numPartitions > 0, "need a positive partition count")
-    val ck = graft.ops.Sweep.withoutAqe(
-        df.sparkSession.asInstanceOf[SparkSession]) {
-      df.repartition(numPartitions, keys.map(col): _*)
-        .localCheckpoint(true)
-    }
-    declare(df.sparkSession.asInstanceOf[SparkSession], ck, keys,
-            numPartitions)
-  }
-
-  /** [[apply]] fused with a row count: the count() action that
-    * materializes the local checkpoint RETURNS the row count, so a
-    * sweep operator that needs N (every PageRank variant fetches the
-    * node count once to seed 1/N) gets it from the SAME scheduler job
-    * that pins the frame — the r14 shape ran `pin(deg)` then
-    * `deg.count()`, one whole job re-scanning the just-written blocks
-    * for a number the materialization pass already knew (r14 verdict
-    * item: sweep cost is per-job scheduling, not data movement).
+    * `HashPartitioning(keys, numPartitions)`, plus a row count from
+    * the SAME scheduler job: all rows, or with `flagCol` only the rows
+    * whose boolean flag is true (nulls count as false). The checkpoint's
+    * blocks are the caller's to release (see
+    * [[graft.ops.Staging.stageCheckpoint]]).
+    *
+    * The count is free because the materializing action IS a count. A
+    * sweep operator that needs N (every PageRank variant seeds 1/N)
+    * gets it from the job that pins the frame — the r14 shape ran
+    * `pin(deg)` then `deg.count()`, one whole job re-scanning the
+    * just-written blocks for a number the materialization pass already
+    * knew (r14 verdict: sweep cost is per-job scheduling, not data
+    * movement). The flagged count is the observable for INTEGRAL-state
+    * convergence (r16 verdict item 6): a step that stamps a
+    * changed-vs-last-sweep flag detects its fixpoint without a second
+    * comparison job. The flag column stays in the returned frame.
     *
     * Mirrors Dataset.localCheckpoint(eager=true) at the RDD layer —
     * toRdd.map(_.copy()) (the physical rows are reused UnsafeRows;
     * caching without the copy aliases every row to the last one
     * scanned, silent corruption), RDD-level localCheckpoint, then the
-    * counting action — and declares the partitioning the same way. */
-  def withCount(df: DataFrame, keys: Seq[String],
-                numPartitions: Int): (DataFrame, Long) = {
-    require(keys.nonEmpty, "need at least one key") // see apply()
+    * counting action. */
+  def apply(df: DataFrame, keys: Seq[String], numPartitions: Int,
+            flagCol: Option[String] = None): (DataFrame, Long) = {
     require(numPartitions > 0, "need a positive partition count")
     val spark = df.sparkSession.asInstanceOf[SparkSession]
     ensureStrategy(spark)
-    val (rep, rdd, n) = graft.ops.Sweep.withoutAqe(spark) {
-      val rep = df.repartition(numPartitions, keys.map(col): _*)
-        .queryExecution
-      val rdd = rep.toRdd.map(_.copy())
-      rdd.localCheckpoint()
-      (rep, rdd, rdd.count()) // one materializing job; count rides it free
-    }
-    val declared = GraftPinnedRDD(
-      rep.analyzed.output, rdd,
-      HashPartitioning(resolve(keys, rep.analyzed.output), numPartitions))
-    (Dataset.ofRows(spark, declared), n)
-  }
-
-  /** [[withCount]] counting only rows whose boolean `flagCol` is true
-    * (nulls count as false) — the fused observable for INTEGRAL-state
-    * convergence (r16 verdict item 6): a sweep operator whose step
-    * stamps a changed-vs-last-sweep flag can detect a fixpoint from
-    * the SAME scheduler job that pins the frame, instead of a second
-    * comparison job. The flag column stays in the returned frame
-    * (callers strip it after the fold). */
-  def withFlagCount(df: DataFrame, keys: Seq[String], numPartitions: Int,
-                    flagCol: String): (DataFrame, Long) = {
-    require(keys.nonEmpty, "need at least one key") // see apply()
-    require(numPartitions > 0, "need a positive partition count")
-    val spark = df.sparkSession.asInstanceOf[SparkSession]
-    ensureStrategy(spark)
-    val (rep, rdd, n) = graft.ops.Sweep.withoutAqe(spark) {
+    graft.ops.Sweep.withoutAqe(spark) {
       val rep = df.repartition(numPartitions, keys.map(col): _*)
         .queryExecution
       val out = rep.analyzed.output
-      val idx = out.indexWhere(_.name == flagCol)
-      require(idx >= 0 && out.count(_.name == flagCol) == 1,
-        s"flag column '$flagCol' must match exactly one output column " +
-          s"(${out.map(_.name).mkString(", ")})")
-      require(out(idx).dataType ==
-          org.apache.spark.sql.types.BooleanType,
-        s"flag column '$flagCol' must be boolean, is ${out(idx).dataType}")
-      val rdd = rep.toRdd.map(_.copy()) // see withCount: rows are reused
+      // every check runs BEFORE the job: a failure after it would leave
+      // cached checkpoint blocks that no caller ever registered for
+      // release (callers stage only on successful return)
+      val declared = HashPartitioning(resolve(keys, out), numPartitions)
+      val idx = flagCol.fold(-1) { f =>
+        val i = out.indexWhere(_.name == f)
+        require(i >= 0 && out.count(_.name == f) == 1,
+          s"flag column '$f' must match exactly one output column " +
+            s"(${out.map(_.name).mkString(", ")})")
+        require(out(i).dataType == org.apache.spark.sql.types.BooleanType,
+          s"flag column '$f' must be boolean, is ${out(i).dataType}")
+        i
+      }
+      val rdd = rep.toRdd.map(_.copy())
       rdd.localCheckpoint()
-      // one materializing action; the flagged-row count rides it free
+      // one materializing job; the count rides it free
       val counts = rdd.sparkContext.runJob(rdd,
         (it: Iterator[InternalRow]) => {
           var c = 0L
           while (it.hasNext) {
             val r = it.next()
-            if (!r.isNullAt(idx) && r.getBoolean(idx)) c += 1
+            if (idx < 0 || (!r.isNullAt(idx) && r.getBoolean(idx))) c += 1
           }
           c
         })
-      (rep, rdd, counts.sum)
+      (Dataset.ofRows(spark, GraftPinnedRDD(out, rdd, declared)), counts.sum)
     }
-    val declared = GraftPinnedRDD(
-      rep.analyzed.output, rdd,
-      HashPartitioning(resolve(keys, rep.analyzed.output), numPartitions))
-    (Dataset.ofRows(spark, declared), n)
   }
 
   private def ensureStrategy(spark: SparkSession): Unit =
@@ -254,26 +218,8 @@ object GraftPartitionedCheckpoint {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ GraftPinStrategy
 
-  private def declare(spark: SparkSession, ck: DataFrame, keys: Seq[String],
-                      numPartitions: Int): DataFrame = {
-    ensureStrategy(spark)
-    ck.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        val declared = GraftPinnedRDD(
-          l.output, l.rdd,
-          HashPartitioning(resolve(keys, l.output), numPartitions))
-        Dataset.ofRows(spark, declared)
-      case _ =>
-        // localCheckpoint not rooting at LogicalRDD would be a Spark
-        // behavior change; degrade to the undeclared checkpoint
-        // (correct, just re-exchanged) rather than failing the query
-        ck
-    }
-  }
-
-  private def resolve(keys: Seq[String],
-                      output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute])
-      : Seq[org.apache.spark.sql.catalyst.expressions.Attribute] = {
+  private def resolve(keys: Seq[String], output: Seq[Attribute])
+      : Seq[Attribute] = {
     require(keys.nonEmpty, "need at least one key")
     keys.map { k =>
       // exactly-one match, or refuse: declaring a partitioning on

@@ -525,4 +525,78 @@ class GraphsSpec extends AnyFunSuite {
     // HLL max-union is monotone)
     assert(got.map(_._3) == got.map(_._3).sorted)
   }
+
+  test("sweep family: scheduler jobs per call stay pinned (table over every operator)") {
+    // One row per sweep operator (plus connected components, which
+    // shares the pin): the listener-counted jobs of one call, build
+    // included, collected on the spec fixtures at the session's own
+    // settings (AQE on, 4 shuffle partitions). Pins, fused counts,
+    // chunk cadence and early stops all show up here, so a refactor of
+    // the shared harness that adds or drops a job turns this red.
+    // cc-driver and personalizedPageRank take their gate/seed counts
+    // from their pins' own jobs. While each ran a separate count they
+    // took 4 and 11 jobs: cc-driver's count() over its 4-partition pin
+    // was two jobs under AQE (the aggregate's shuffle stage plus the
+    // result), the seed count over a 1-partition pin needed no shuffle.
+    val sc = spark.sparkContext
+    val star = Seq(("c", "l1"), ("c", "l2"), ("c", "l3"), ("c", "l4"))
+      .toDF("a", "b")
+    val chain = Seq(("A", "B"), ("B", "C")).toDF("s", "t")
+    val path = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"),
+      ("f", "g")).toDF("u", "v")
+    val weighted = Seq(("a", "b", 10L), ("a", "b", 12L), ("a", "c", 1L),
+      ("c", "b", 1L)).toDF("u", "v", "w")
+    val tri = Seq(("x", "y"), ("y", "z"), ("x", "z")).toDF("a", "b")
+    val k4 = (for { a <- 1 to 4; b <- 1 to 4 if a < b } yield (a, b)) ++
+      Seq((4, 5), (5, 6), (7, 8), (8, 9), (7, 9))
+    val core = k4.map { case (a, b) => (a.toLong, b.toLong) }.toDF("u", "v")
+    val hb = Seq(("1", "2"), ("2", "3"), ("3", "4"), ("4", "5"),
+      ("6", "7")).toDF("a", "b")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
+      .toDF("id_a", "id_b")
+    val seedA = Seq("a").toDF("node")
+    val cases: Seq[(String, () => Unit, Int)] = Seq(
+      ("pageRank", () => Graphs.pageRank(star, "a", "b", 5).collect(), 6),
+      ("pageRankWeighted", () => Graphs.pageRankWeighted(
+        weighted, "u", "v", "w", 3).collect(), 6),
+      ("pageRankDirected", () => Graphs.pageRankDirected(
+        chain, "s", "t", 3).collect(), 10),
+      ("personalizedPageRank", () => Graphs.personalizedPageRank(
+        chain, "s", "t", Seq("A").toDF("node"), 3).collect(), 10),
+      ("bfsHops", () => Graphs.bfsHops(path, "u", "v", seedA, "node", 3)
+        .collect(), 5),
+      ("ssspWeighted", () => Graphs.ssspWeighted(
+        weighted, "u", "v", "w", seedA, "node", 3).collect(), 5),
+      ("labelPropagation", () => Graphs.labelPropagation(tri, "a", "b", 4)
+        .collect(), 5),
+      ("kCore", () => Graphs.kCore(core, "u", "v", 3, 5).collect(), 5),
+      ("hyperBallCensus", () => Graphs.hyperBallCensus(
+        hb, "a", "b", Seq("1", "6").toDF("node"), "node", 3).collect(), 14),
+      ("cc-driver", () => graft.ext.Dedup.connectedComponentsWithSweeps(
+        pairs)._1.collect(), 2),
+      ("cc-sweeps", () => graft.ext.Dedup.connectedComponentsWithSweeps(
+        pairs, smallGraphThreshold = 0)._1.collect(), 26))
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    sc.addSparkListener(listener)
+    val measured = try cases.map { case (name, run, _) =>
+      val group = s"sweep_jobs_$name"
+      sc.setJobGroup(group, group)
+      try run() finally sc.clearJobGroup()
+      graft.ops.Staging.releaseAll()
+      org.apache.spark.ListenerDrain.drain(sc)
+      name -> Option(jobs.get(group)).map(_.intValue).getOrElse(0)
+    } finally sc.removeSparkListener(listener)
+    val expected = cases.map { case (name, _, n) => name -> n }
+    assert(measured == expected,
+      "per-call job counts moved:\n" + measured.zip(expected).collect {
+        case ((n, got), (_, want)) if got != want => s"  $n: $want -> $got"
+      }.mkString("\n"))
+  }
 }

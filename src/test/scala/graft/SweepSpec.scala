@@ -14,7 +14,7 @@ class SweepSpec extends AnyFunSuite {
 
   test("pin declares HashPartitioning on a GraftPinnedRDD; values unchanged") {
     val df = (1 to 400).map(i => (i % 40L, i.toLong)).toDF("k", "v")
-    val pinned = graft.ops.Sweep.pin(df, "k")
+    val (pinned, _) = graft.ops.Sweep.pin(df, Seq("k"), 4)
     pinned.queryExecution.analyzed match {
       case g: org.apache.spark.sql.execution.GraftPinnedRDD =>
         assert(g.partitioning.expressions.map(_.asInstanceOf[
@@ -29,7 +29,7 @@ class SweepSpec extends AnyFunSuite {
 
   test("pin scan reports numOutputRows (UI-metric parity with RDDScanExec, r16 advice)") {
     val df = (1 to 250).map(i => (i % 10L, i.toLong)).toDF("k", "v")
-    val pinned = graft.ops.Sweep.pin(df, "k")
+    val (pinned, _) = graft.ops.Sweep.pin(df, Seq("k"), 4)
     // a bare count() is agg-planned; force the scan itself to emit all
     // rows so the leaf's metric observes 250
     assert(pinned.collect().length == 250)
@@ -42,10 +42,10 @@ class SweepSpec extends AnyFunSuite {
   }
 
   test("two pinned frames join with ZERO exchanges; an unpinned checkpoint needs one") {
-    val a = graft.ops.Sweep.pin(
-      (1 to 300).map(i => (i % 30L, i.toLong)).toDF("k", "va"), "k")
-    val b = graft.ops.Sweep.pin(
-      (1 to 200).map(i => (i % 30L, i * 2L)).toDF("k", "vb"), "k")
+    val (a, _) = graft.ops.Sweep.pin(
+      (1 to 300).map(i => (i % 30L, i.toLong)).toDF("k", "va"), Seq("k"), 4)
+    val (b, _) = graft.ops.Sweep.pin(
+      (1 to 200).map(i => (i % 30L, i * 2L)).toDF("k", "vb"), Seq("k"), 4)
     def exchanges(df: org.apache.spark.sql.DataFrame): Int = {
       df.collect()
       "Exchange hashpartitioning".r.findAllMatchIn(
@@ -63,7 +63,7 @@ class SweepSpec extends AnyFunSuite {
   }
 
   test("duplicate pin references canonicalize equal; a sealed intermediate's exchange is reused") {
-    // The r16 fix behind Sweep.foldPinned: Spark's LogicalRDD never
+    // The r16 fix behind Sweep.fold: Spark's LogicalRDD never
     // compares sameResult across DeduplicateRelations re-instancing,
     // which silently defeated CacheManager substitution AND
     // ReuseExchange for any subtree rooted at a pin — every
@@ -73,7 +73,7 @@ class SweepSpec extends AnyFunSuite {
     // partitioning positionally, so the same pin referenced twice in
     // one plan dedupes.
     val df = (1 to 300).map(i => (i % 30L, i.toLong)).toDF("k", "v")
-    val base = graft.ops.Sweep.pin(df, "k")
+    val (base, _) = graft.ops.Sweep.pin(df, Seq("k"), 4)
     // 1. logical canonical equality across newInstance copies
     val a = base.queryExecution.analyzed
     val b = a.asInstanceOf[
@@ -98,15 +98,15 @@ class SweepSpec extends AnyFunSuite {
   }
 
   test("CANARY: plain localCheckpoint still hides its partitioning (the shim's reason to exist)") {
-    // GraftPartitionedCheckpoint reaches package-private LogicalRDD
-    // precisely because Spark 4.1 creates localCheckpoint's LogicalRDD
-    // with UnknownPartitioning, hiding the layout from downstream
+    // GraftPartitionedCheckpoint scans its checkpoint as a
+    // GraftPinnedRDD with the partitioning declared precisely because
+    // Spark 4.1 creates localCheckpoint's LogicalRDD with
+    // UnknownPartitioning, hiding the layout from downstream
     // ENSURE_REQUIREMENTS planning. This test MUST KEEP FAILING to
     // hold in the counterexample sense: if it ever goes red, Spark has
     // started declaring (or otherwise changed) the checkpoint
-    // partitioning contract — revisit the shim (it may be redundant,
-    // or its LogicalRDD rebuild may now be wrong) before trusting any
-    // sweep plan.
+    // partitioning contract — revisit the shim (it may be redundant)
+    // before trusting any sweep plan.
     val ck = (1 to 400).map(i => (i % 40L, i.toLong)).toDF("k", "v")
       .repartition(8, col("k"))
       .localCheckpoint(true)
@@ -119,8 +119,8 @@ class SweepSpec extends AnyFunSuite {
             "audit the shim against the new LogicalRDD contract")
       case other =>
         fail("SPARK BEHAVIOR CHANGE: localCheckpoint no longer roots at " +
-          s"LogicalRDD (got ${other.getClass}) — GraftPartitionedCheckpoint " +
-          "degrades to the undeclared path; audit the shim")
+          s"LogicalRDD (got ${other.getClass}) — re-probe whether a plain " +
+          "checkpoint now keeps its partitioning before trusting any sweep plan")
     }
   }
 
@@ -129,7 +129,7 @@ class SweepSpec extends AnyFunSuite {
     // fused count == true count: the one materializing action IS the
     // count, so sweep operators that seed on N (every PageRank
     // variant) pay zero extra jobs for it
-    val (pinned, n) = graft.ops.Sweep.pinCounted(df, "k")
+    val (pinned, n) = graft.ops.Sweep.pin(df, Seq("k"), 4)
     assert(n === 400L)
     // declaration identical to pin's: HashPartitioning on the key
     pinned.queryExecution.analyzed match {
@@ -144,8 +144,8 @@ class SweepSpec extends AnyFunSuite {
     assert(pinned.orderBy("k", "v").collect().toSeq ==
            df.orderBy("k", "v").collect().toSeq)
     // and the pinned frame co-locates in a join, like pin's
-    val other = graft.ops.Sweep.pin(
-      (1 to 200).map(i => (i % 40L, i * 2L)).toDF("k", "vb"), "k")
+    val (other, _) = graft.ops.Sweep.pin(
+      (1 to 200).map(i => (i % 40L, i * 2L)).toDF("k", "vb"), Seq("k"), 4)
     val joined = pinned.hint("merge").join(other, "k")
     joined.collect()
     val ex = "Exchange hashpartitioning".r.findAllMatchIn(
