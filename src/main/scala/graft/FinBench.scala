@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.finlogic.FinData
 
@@ -65,13 +65,7 @@ object FinBench {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val dir = "/tmp/finbench_data"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     synthesize(spark, dir)
@@ -86,6 +80,7 @@ object FinBench {
         s"$dir/trades.parquet", s"$dir/language.parquet")
       d.indicators.count() // materialize the cached pipeline
       d.financials.count()
+      d.companies.count()
       d
     }
     val (_, tInfo) = t(data.info(dir).collect())

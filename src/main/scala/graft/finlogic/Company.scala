@@ -1,17 +1,20 @@
 package graft.finlogic
 
-import java.time.LocalDate
-
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Kernels
 
 /** Company view over a FinData — Spark re-expression of the
-  * reference's `src/finlogic/company.py` Company class. The per-company
-  * slice is a cached filtered DataFrame (~3k rows for the largest
-  * reference company), so the handful of scalar period aggregates the
-  * constructor needs are cheap collects; every report is one lazy
-  * pivot plan.
+  * reference's `src/finlogic/company.py` Company class. The identifier
+  * resolves against FinData's company dimension. The per-company slice
+  * is a cached filtered DataFrame in ONE partition: it holds one
+  * company's filings (~3k rows for the largest reference company,
+  * bounded by periods x codes x 2), so one task holds it comfortably,
+  * and a single-partition child satisfies every distribution, so the
+  * windows, pivot, join and sort of a report plan with no exchange.
+  * The handful of scalar period aggregates the constructor needs are
+  * one cheap collect; every report is one lazy pivot plan after its
+  * period collect.
   */
 final class Company(
     val data: FinData,
@@ -42,15 +45,19 @@ final class Company(
   }
 
   /** Identifier resolution (reference `company.py:94-118`): CVM id
-    * (number) or tax id (string); KeyError -> NoSuchElementException. */
+    * (number) or tax id (string) against the company dimension, whose
+    * (name_id, tax_id) identity is the one searchCompany shows; a tax
+    * id shared by several companies resolves to the lowest CVM id.
+    * KeyError -> NoSuchElementException. */
   val (cvmId: Long, taxId: String, nameId: String) = {
     val byId = identifier match {
-      case i: Int => data.financials.filter(col("cvm_id") === i.toLong)
-      case l: Long => data.financials.filter(col("cvm_id") === l)
-      case s: String => data.financials.filter(col("tax_id") === s)
+      case i: Int => col("cvm_id") === i.toLong
+      case l: Long => col("cvm_id") === l
+      case s: String => col("tax_id") === s
       case other => throw new IllegalArgumentException(s"Invalid identifier: $other")
     }
-    val rows = byId.select("cvm_id", "tax_id", "name_id").distinct().limit(1).collect()
+    val rows = data.companies.filter(byId).select("cvm_id", "tax_id", "name_id")
+      .orderBy("cvm_id").limit(1).collect()
     if (rows.isEmpty)
       throw new NoSuchElementException(s"Company 'identifier' $identifier not found.")
     (rows(0).getLong(0), rows(0).getString(1), rows(0).getString(2))
@@ -58,7 +65,7 @@ final class Company(
 
   /** Company slice with EPS-exempt unit scaling (reference
     * `company.py:248-281`, trap 1: acc_code prefix "3.99" is never
-    * divided by the accounting unit).
+    * divided by the accounting unit), cached in one partition.
     */
   val df: DataFrame = data.financials
     .filter(col("cvm_id") === cvmId && col("is_consolidated") === isConsolidated)
@@ -66,6 +73,7 @@ final class Company(
       when(!col("acc_code").startsWith("3.99"), col("acc_value") / accUnit)
         .otherwise(col("acc_value")))
     .drop("name_id", "cvm_id", "tax_id", "is_consolidated")
+    .coalesce(1)
     .cache()
 
   // Scalar period attributes (reference company.py:267-278) — one
@@ -163,16 +171,13 @@ final class Company(
       date_format(col("period_end"), "yyyy-MM-dd") === lit(maxP))
   }
 
-  /** pt -> en account names via broadcast join, with the reference's
-    * "(pt) " fallback prefix for missing translations
-    * (`company.py:425-433`, trap 8). */
+  /** pt -> en account names through FinData's dictionary, a literal
+    * map lookup, with the reference's "(pt) " fallback prefix for
+    * missing translations (`company.py:425-433`, trap 8). */
   private def translate(dfi: DataFrame): DataFrame =
     if (language != "English") dfi
-    else Kernels.translate(dfi, data.language,
-      keyCol = "acc_name", dictKey = "pt", dictVal = "en",
-      outCol = "acc_name_en",
-      fallback = concat(lit("(pt) "), col("acc_name")))
-      .drop("acc_name").withColumnRenamed("acc_name_en", "acc_name")
+    else dfi.withColumn("acc_name", coalesce(
+      typedLit(data.languageDict).apply(col("acc_name")), concat(lit("(pt) "), col("acc_name"))))
 
   /** Reference `company.py:355-477` report(): one pivot plan —
     * acc_code rows x period columns, zero-filled, with the " ltm"
@@ -223,7 +228,10 @@ final class Company(
       .pivot("p", periods)
       .agg(first("acc_value"))
     val labeled = periods.foldLeft(wide)((w, p) => w.withColumnRenamed(p, label(p)))
-    index.join(labeled, Seq("acc_code"), "left")
+    // shuffle_hash, not the broadcast the size estimate picks: both
+    // sides descend from the one-partition slice, so the join needs no
+    // exchange, where a broadcast costs a job of its own.
+    index.join(labeled.hint("shuffle_hash"), Seq("acc_code"), "left")
       .na.fill(0.0, periods.map(label))
       .orderBy("acc_code")
   }
@@ -248,7 +256,7 @@ final class Company(
     */
   def indicators(numYears: Int = 0): DataFrame = {
     val slice = data.indicators.filter(
-      col("cvm_id") === cvmId && col("is_consolidated") === isConsolidated)
+      col("cvm_id") === cvmId && col("is_consolidated") === isConsolidated).coalesce(1)
     val allPeriods = slice
       .select(date_format(col("period_end"), "yyyy-MM-dd").as("p"))
       .distinct().orderBy("p").collect().map(_.getString(0)).toSeq

@@ -62,14 +62,9 @@ object FinLogic {
 
   /** Drop the module state (no reference counterpart — its globals
     * live for the interpreter's lifetime; long-lived Spark sessions
-    * deserve an unload). Unpersists the cached frames. */
+    * deserve an unload). Releases every cache the FinData owns. */
   def unload(): Unit = {
-    current.foreach { case (d, _) =>
-      d.financials.unpersist(blocking = false)
-      d.trades.unpersist(blocking = false)
-      d.language.unpersist(blocking = false)
-      d.indicators.unpersist(blocking = false)
-    }
+    current.foreach(_._1.unpersist())
     current = None
   }
 }

@@ -536,10 +536,12 @@ object Kernels {
             .otherwise(lit(Double.NegativeInfinity))))
 
   /** Dictionary translation as a broadcast left join with a prefixed
-    * fallback for missing keys — replaces the reference's collected
-    * Python dict + `replace_strict` (`company.py:425-433`). The dict
-    * side stays distributed (broadcast), so this holds at any fact-table
-    * scale as long as the dictionary itself is small.
+    * fallback for missing keys — the distributed form of the
+    * reference's Python dict + `replace_strict` (`company.py:425-433`),
+    * for a dictionary held as a frame. The dict side stays distributed
+    * (broadcast), so this holds at any fact-table scale as long as the
+    * dictionary itself is small. FinLogic's Company instead looks its
+    * names up in the language table collected once per FinData.
     */
   def translate(df: DataFrame, dict: DataFrame, keyCol: String,
                 dictKey: String, dictVal: String,

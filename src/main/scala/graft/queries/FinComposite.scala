@@ -21,7 +21,7 @@ import graft.tables.Tables
   * oracles mirror the mapping plus the composite semantics in SQL, so
   * every §2.10 trap the composites encode (EPS unit exemption, " ltm"
   * column label, acc_level depth filter, last-N-period slice O4,
-  * translation fallback, reorder-index join J4, zero-fill) is
+  * translation fallback, display reorder J4, zero-fill) is
   * hash-checked by the driver, not just by ScalaTest.
   *
   * Mapping (mirrored verbatim in the oracle SQL):
@@ -116,8 +116,8 @@ object FinComposite {
   }
 
   val queries: Map[String, Q] = Map(
-    // §2.10 search_company (data.py:103-149): dedup universe ->
-    // broadcast join latest trades -> regex filter.
+    // §2.10 search_company (data.py:103-149): company dimension ->
+    // join latest trades -> regex filter.
     "q48_search_company" -> ((s, d) =>
       mapped(s, d)._1.searchCompany("77$", "name_id").orderBy("cvm_id")),
 
@@ -136,7 +136,7 @@ object FinComposite {
 
     // §2.10 Company.indicators/format_indicators (indicators.py:
     // 221-232): full indicators build -> unit scale -> unpivot ->
-    // period pivot -> reorder-index join (J4) — melted to long.
+    // period pivot -> display reorder (J4) — melted to long.
     // effective_tax_rate is excluded: with no 3.07/3.08 rows mapped it
     // is IEEE 0/0 = NaN, which DuckDB SQL cannot mirror portably.
     "q51_format_indicators" -> ((s, d) => {
