@@ -1,19 +1,26 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
-import graft.finlogic.FinData
+import graft.finlogic.{Company, FinData}
 
 /** Reference-scale benchmark of the FinLogic-parity pipeline.
   *
   * Synthesizes a CVM-shaped dataset at 2x the reference's published
   * scale — ~1.5M accounting entries (220 companies x 2 accounting
   * methods x 60 periods x 57 codes), 210 traded companies, 2009-2023
-  * span (BASELINE.md) — writes it as Parquet, then times the public
-  * API end-to-end: load (incl. build_indicators), info, search, rank,
-  * Company construction, report, custom_report, indicators. Prints
-  * one JSON line. The reference publishes no latency numbers (its
-  * contract is "interactive on a laptop"); this pins ours.
+  * span (BASELINE.md) — writes it as Parquet to a temp directory
+  * removed at exit, then times the public API end-to-end: load (incl.
+  * build_indicators), info, search, rank, Company construction,
+  * report, custom_report, indicators. Prints one JSON line: `<call>_s`
+  * is the call's cold first use in the JVM, `<call>_warm_s` the median
+  * of 5 repeats with the same arguments, and `<phase>_compiles` /
+  * `<phase>_compile_ms` the generated classes a cold phase compiled
+  * (`<call>_warm_compiles` / `_warm_compile_ms`: summed over the 5
+  * repeats). The reference publishes no latency numbers (its contract
+  * is "interactive on a laptop"); this pins ours.
   */
 object FinBench {
 
@@ -62,20 +69,28 @@ object FinBench {
       .toDF("pt", "en").write.mode("overwrite").parquet(s"$dir/language.parquet")
   }
 
+  /** One timed phase: wall seconds and the generated classes it
+    * compiled (count and Janino time). */
+  private final case class Phase(s: Double, compiles: Long, compileMs: Double)
+
+  private def phase[A](f: => A): (A, Phase) = {
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val (c0, ns0) = (compiles.getCount, CodeGenerator.compileTime)
+    val t0 = System.nanoTime(); val r = f
+    val s = (System.nanoTime() - t0) / 1e9
+    (r, Phase(s, compiles.getCount - c0, (CodeGenerator.compileTime - ns0) / 1e6))
+  }
+
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val dir = "/tmp/finbench_data"
+    val dir = graft.ops.Scratch.dir("finbench")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     synthesize(spark, dir)
     val nRows = spark.read.parquet(s"$dir/financials.parquet").count()
 
-    def t[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val (data, tLoad) = t {
+    val (data, load) = phase {
       val d = FinData.load(spark, s"$dir/financials.parquet",
         s"$dir/trades.parquet", s"$dir/language.parquet")
       d.indicators.count() // materialize the cached pipeline
@@ -83,18 +98,33 @@ object FinBench {
       d.companies.count()
       d
     }
-    val (_, tInfo) = t(data.info(dir).collect())
-    val (_, tSearch) = t(data.searchCompany("COMPANY 1").collect())
-    val (_, tRank) = t(data.rank(rankBy = "roic").collect())
-    val ((co), tCompany) = t(data.company(42L, accUnit = "m"))
-    val (_, tReport) = t(co.report("balance_sheet", accLevel = 2).collect())
-    val (_, tCustom) = t(co.customReport(Seq("1", "3.01", "6.01"), numYears = 5).collect())
-    val (_, tInd) = t(co.indicators(numYears = 8).collect())
+    var co: Company = null
+    val calls: Seq[(String, () => Any)] = Seq(
+      "info" -> (() => data.info(dir).collect()),
+      "search" -> (() => data.searchCompany("COMPANY 1").collect()),
+      "rank" -> (() => data.rank(rankBy = "roic").collect()),
+      "company_init" -> (() => co = data.company(42L, accUnit = "m")),
+      "report" -> (() => co.report("balance_sheet", accLevel = 2).collect()),
+      "custom_report" -> (() => co.customReport(Seq("1", "3.01", "6.01"), numYears = 5).collect()),
+      "indicators" -> (() => co.indicators(numYears = 8).collect()))
+    // Cold: each call's first use in this JVM. Warm: the median of 5
+    // repeats with the same arguments, as in an analyst's later calls.
+    val cold = calls.map { case (name, f) => name -> phase(f())._2 }
+    val warm = calls.map { case (name, f) =>
+      val reps = Seq.fill(5)(phase(f())._2)
+      name -> Phase(reps.map(_.s).sorted.apply(2), reps.map(_.compiles).sum,
+        reps.map(_.compileMs).sum)
+    }
 
-    println(s"""{"metric":"finlogic_pipeline","rows":$nRows,"companies":210,""" +
-      s""""load_and_build_indicators_s":$tLoad,"info_s":$tInfo,""" +
-      s""""search_s":$tSearch,"rank_s":$tRank,"company_init_s":$tCompany,""" +
-      s""""report_s":$tReport,"custom_report_s":$tCustom,"indicators_s":$tInd}""")
+    val phases = ("load_and_build_indicators" -> load) +: cold
+    val fields = Seq("\"metric\":\"finlogic_pipeline\"", s"\"rows\":$nRows", "\"companies\":210") ++
+      phases.map { case (n, p) => s"\"${n}_s\":${p.s}" } ++
+      warm.map { case (n, p) => s"\"${n}_warm_s\":${p.s}" } ++
+      phases.flatMap { case (n, p) =>
+        Seq(s"\"${n}_compiles\":${p.compiles}", f"\"${n}_compile_ms\":${p.compileMs}%.1f") } ++
+      warm.flatMap { case (n, p) =>
+        Seq(s"\"${n}_warm_compiles\":${p.compiles}", f"\"${n}_warm_compile_ms\":${p.compileMs}%.1f") }
+    println(fields.mkString("{", ",", "}"))
     spark.stop()
   }
 }

@@ -370,22 +370,12 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def scans(plan: SparkPlan, cache: InMemoryRelation): Seq[InMemoryTableScanExec] =
     collect(plan) { case s: InMemoryTableScanExec if s.relation.cachedPlan eq cache.cachedPlan => s }
 
-  test("API calls: scheduler jobs per call stay pinned (table over every call)") {
-    // One row per API call: the listener-counted jobs of one call,
-    // build included, on the spec fixture at the session's own settings
-    // (AQE on, 4 shuffle partitions). Every call runs once first, so the
-    // rows count a warm session's calls, after FinData's caches and
-    // dictionary exist. "company" is a construction of a company whose
-    // slice is not cached yet (BETA; the slice is released after it):
-    // the identifier lookup, AQE's job that fills the slice's cache and
-    // the period aggregate. Before the company dimension and the
-    // one-partition slices the rows were 3, 4, 4, 5, 13, 37, 10 and 14:
-    // search and rank window-sorted the fact table, report and
-    // indicators ran one job per shuffle stage plus a broadcast of the
-    // language table, and info re-ran two aggregates and four counts.
-    val sc = spark.sparkContext
+  /** One session's API calls, each with its expected jobs per warm call.
+    * "company" constructs a company whose slice is not cached yet (BETA)
+    * and releases the slice after it. */
+  private def sessionCalls(): Seq[(String, () => Unit, Int)] = {
     val co = new Company(data, 1, accUnitSpec = "m")
-    val cases: Seq[(String, () => Unit, Int)] = Seq(
+    Seq(
       ("searchCompany", () => data.searchCompany("alpha").collect(), 1),
       ("searchSegment", () => data.searchSegment("an").collect(), 1),
       ("rank", () => data.rank().collect(), 2),
@@ -394,6 +384,22 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       ("customReport", () => co.customReport(Seq("1", "3.01", "6.01")).collect(), 4),
       ("indicators", () => co.indicators().collect(), 2),
       ("info", () => data.info("path").collect(), 1))
+  }
+
+  test("API calls: scheduler jobs per call stay pinned (table over every call)") {
+    // One row per API call: the listener-counted jobs of one call,
+    // build included, on the spec fixture at the session's own settings
+    // (AQE on, 4 shuffle partitions). Every call runs once first, so the
+    // rows count a warm session's calls, after FinData's caches and
+    // dictionary exist. "company" costs the identifier lookup, AQE's job
+    // that fills the slice's cache and the period aggregate. Before the
+    // company dimension and the one-partition slices the rows were 3, 4,
+    // 4, 5, 13, 37, 10 and 14: search and rank window-sorted the fact
+    // table, report and indicators ran one job per shuffle stage plus a
+    // broadcast of the language table, and info re-ran two aggregates
+    // and four counts.
+    val sc = spark.sparkContext
+    val cases = sessionCalls()
     cases.foreach(_._2())
     val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -417,6 +423,21 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "per-call job counts moved:\n" + measured.zip(expected).collect {
         case ((n, got), (_, want)) if got != want => s"  $n: $want -> $got"
       }.mkString("\n"))
+  }
+
+  test("a repeated session compiles no generated class") {
+    // Spark keeps the classes it compiles for generated code in one
+    // JVM-wide cache keyed by their source. A second session with the
+    // same arguments generates the same sources, so every class must
+    // come from that cache: a compile here means the cache evicted a
+    // class the first session needed (GraftSession.CodegenCacheEntries).
+    val calls = sessionCalls()
+    calls.foreach(_._2())
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    calls.foreach(_._2())
+    assert(compiles.getCount == before,
+      s"${compiles.getCount - before} classes compiled again in a repeated session")
   }
 
   test("plan shape: company plans shuffle nothing, translation broadcasts nothing, " +
