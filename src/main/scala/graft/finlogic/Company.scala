@@ -1,20 +1,48 @@
 package graft.finlogic
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.ops.Kernels
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import Company._
 
 /** Company view over a FinData — Spark re-expression of the
   * reference's `src/finlogic/company.py` Company class. The identifier
-  * resolves against FinData's company dimension. The per-company slice
-  * is a cached filtered DataFrame in ONE partition: it holds one
-  * company's filings (~3k rows for the largest reference company,
-  * bounded by periods x codes x 2), so one task holds it comfortably,
-  * and a single-partition child satisfies every distribution, so the
-  * windows, pivot, join and sort of a report plan with no exchange.
-  * The handful of scalar period aggregates the constructor needs are
-  * one cheap collect; every report is one lazy pivot plan after its
-  * period collect.
+  * resolves against FinData's company dimension.
+  *
+  * The company's slice lives on the driver, as the reference's eager
+  * frame does (`_set_df`, `company.py:248-281`). It holds one company's
+  * filings: at most periods x codes x 2 rows, about 3k for the largest
+  * reference company. The constructor collects it once, from a Spark
+  * filter and projection over the cached financials, and `report`,
+  * `customReport` and `indicators` build their grids from it in plain
+  * Scala and return local frames. For rows this few, Spark's per-query
+  * price (analysis, AQE, code generation, a scheduler job) was most of
+  * the cost: on the benchmark's `fin_interactive` workload (4-core
+  * host, traced seed 30) a session's report fell from 442 to 15 ms, its
+  * custom report from 1,062 to 15 ms, and the session ran 8 jobs
+  * instead of 16.
+  *
+  * The grids keep the answers of the Spark plans they replace:
+  *  - report and custom-report cells are `na.fill(0.0)`-ed, which
+  *    turns null and NaN into 0.0; indicator grids keep both;
+  *  - every keep-last is `Kernels.dedupKeepLast`'s: a descending sort
+  *    with nulls last, so null ranks lowest, NaN highest, -0.0 ties
+  *    with 0.0, and the first of tied rows wins. A code's name is the
+  *    keep-last by (period_end, acc_name), a cell the keep-last by
+  *    (is_annual, acc_value); in indicators the annual row wins at a
+  *    shared period;
+  *  - a row with a null acc_code is in no report; a null acc_name stays
+  *    null, with no "(pt) " prefix;
+  *  - periods are `yyyy-MM-dd` strings in string order; " ltm" labels
+  *    the last period when the company's last filing is quarterly;
+  *  - custom-report columns come in `unionByName(allowMissingColumns)`
+  *    order (balance-sheet labels, then new income, then new cash-flow
+  *    ones); rows come statement by statement, each in acc_code order;
+  *  - period columns are doubles, non-null in reports and nullable in
+  *    indicators. `is_annual` and `period_end` are non-null, as
+  *    `Schemas.financials` declares.
   */
 final class Company(
     val data: FinData,
@@ -63,36 +91,42 @@ final class Company(
     (rows(0).getLong(0), rows(0).getString(1), rows(0).getString(2))
   }
 
+  private val spark = data.financials.sparkSession
+
   /** Company slice with EPS-exempt unit scaling (reference
     * `company.py:248-281`, trap 1: acc_code prefix "3.99" is never
-    * divided by the accounting unit), cached in one partition.
+    * divided by the accounting unit): a filter and projection over the
+    * cached financials, collected once.
     */
-  val df: DataFrame = data.financials
+  private val slice: DataFrame = data.financials
     .filter(col("cvm_id") === cvmId && col("is_consolidated") === isConsolidated)
     .withColumn("acc_value",
       when(!col("acc_code").startsWith("3.99"), col("acc_value") / accUnit)
         .otherwise(col("acc_value")))
     .drop("name_id", "cvm_id", "tax_id", "is_consolidated")
-    .coalesce(1)
-    .cache()
 
-  // Scalar period attributes (reference company.py:267-278) — one
-  // tiny aggregate over the cached slice.
-  private val periodRow = df.agg(
-    date_format(min("period_end"), "yyyy-MM-dd").as("first"),
-    date_format(max("period_end"), "yyyy-MM-dd").as("last"),
-    date_format(max(when(col("is_annual"), col("period_end"))), "yyyy-MM-dd").as("lastAnnual"),
-    date_format(max(when(!col("is_annual"), col("period_end"))), "yyyy-MM-dd").as("lastQuarterly"),
-    count(lit(1)).as("rows")).head()
+  private val sliceRows: Array[Row] = slice.collect()
 
-  val firstPeriod: Option[String] = Option(periodRow.getString(0))
-  val lastPeriod: Option[String] = Option(periodRow.getString(1))
-  val lastAnnual: Option[String] = Option(periodRow.getString(2))
+  /** The slice as a local frame, in the order of the financials cache. */
+  val df: DataFrame = spark.createDataFrame(sliceRows.toSeq.asJava, slice.schema)
+
+  private val entries: Seq[Entry] = {
+    val Seq(code, name, value, annual, period) =
+      Seq("acc_code", "acc_name", "acc_value", "is_annual", "period_end").map(slice.schema.fieldIndex)
+    sliceRows.toSeq.map(r => Entry(r.getString(code), r.getString(name),
+      Option.when(!r.isNullAt(value))(r.getDouble(value)), r.getBoolean(annual), r.get(period).toString))
+  }
+
+  // Scalar period attributes (reference company.py:267-278).
+  val firstPeriod: Option[String] = entries.map(_.period).minOption
+  val lastPeriod: Option[String] = entries.map(_.period).maxOption
+  val lastAnnual: Option[String] = entries.filter(_.annual).map(_.period).maxOption
   val lastPeriodType: String =
     if (lastPeriod == lastAnnual) "annual" else "quarterly"
   val lastQuarterly: Option[String] =
-    if (lastPeriodType == "quarterly") Option(periodRow.getString(3)) else None
-  val accountingRows: Long = periodRow.getLong(4)
+    if (lastPeriodType == "quarterly") entries.filterNot(_.annual).map(_.period).maxOption
+    else None
+  val accountingRows: Long = entries.size.toLong
 
   // ---- Reconfiguration surface (reference `company.py:94-246`).
   // The reference exposes mutable validated property setters
@@ -131,7 +165,6 @@ final class Company(
 
   /** Reference `company.py:283-308` info(). */
   def info(): DataFrame = {
-    val spark = df.sparkSession
     import spark.implicits._
     Seq(
       ("Name", nameId),
@@ -163,105 +196,131 @@ final class Company(
     "earnings_per_share" -> Seq("3.99"),
     "cash_flow" -> Seq("6"))
 
-  /** Drop stale quarters: keep annual rows plus rows at the global max
-    * period (reference `company.py:338-353`). */
-  private def removeNotLastQuarters(dfi: DataFrame): DataFrame = {
-    val maxP = lastPeriod.orNull
-    dfi.filter(col("is_annual") ||
-      date_format(col("period_end"), "yyyy-MM-dd") === lit(maxP))
-  }
-
-  /** pt -> en account names through FinData's dictionary, a literal
-    * map lookup, with the reference's "(pt) " fallback prefix for
-    * missing translations (`company.py:425-433`, trap 8). */
-  private def translate(dfi: DataFrame): DataFrame =
-    if (language != "English") dfi
-    else dfi.withColumn("acc_name", coalesce(
-      typedLit(data.languageDict).apply(col("acc_name")), concat(lit("(pt) "), col("acc_name"))))
-
-  /** Reference `company.py:355-477` report(): one pivot plan —
-    * acc_code rows x period columns, zero-filled, with the " ltm"
-    * suffix on the trailing quarter column (trap 2).
+  /** Reference `company.py:355-477` report(): acc_code rows x period
+    * columns, zero-filled, with the " ltm" suffix on the trailing
+    * quarter column (trap 2).
     */
   def report(reportType: String, accLevel: Int = 0, numYears: Int = 0): DataFrame = {
+    val (labels, rows) = reportGrid(reportType, accLevel, numYears)
+    reportFrame(labels, rows)
+  }
+
+  /** The report's period labels and rows (acc_code, acc_name, one
+    * cell per label), in acc_code order. Stale quarters drop: annual
+    * rows stay, plus rows at the last period (`company.py:338-353`);
+    * `accLevel` keeps codes of at most `accLevel - 1` dots
+    * (`company.py:420-422`); the periods are the last `numYears` of the
+    * report's own (`company.py:473-475`). Index and grid follow
+    * `_build_report`/`_build_report_index` (`company.py:310-336`).
+    */
+  private def reportGrid(reportType: String, accLevel: Int, numYears: Int): (Seq[String], Seq[Row]) = {
     require(ReportTypes.contains(reportType), s"Unknown report type: $reportType")
     require(Seq(0, 1, 2, 3, 4).contains(accLevel), "acc_level expects 0, 1, 2, 3 or 4")
-
-    var d = removeNotLastQuarters(df)
-    if (accLevel > 0) // dots(acc_code) <= accLevel - 1 (company.py:420-422)
-      d = d.filter(
-        length(col("acc_code")) - length(regexp_replace(col("acc_code"), "\\.", "")) <= accLevel - 1)
-    d = translate(d)
-    val codes = ReportTypes(reportType)
-    d = d.filter(codes.map(c => col("acc_code").startsWith(c)).reduce(_ || _))
-
-    // Period slice: last numYears of this report's distinct periods
-    // (tiny driver-side list, as in the reference company.py:473-475).
-    val allPeriods = d.select(date_format(col("period_end"), "yyyy-MM-dd").as("p"))
-      .distinct().orderBy("p").collect().map(_.getString(0)).toSeq
-    val periods = if (numYears > 0) allPeriods.takeRight(numYears) else allPeriods
-    d = d.filter(date_format(col("period_end"), "yyyy-MM-dd").isin(periods: _*))
-
-    buildReport(d, periods)
-  }
-
-  /** Reference `_build_report`/`_build_report_index`
-    * (`company.py:310-336`): index = latest acc_name per code; grid =
-    * pivot on the period label with zero-fill; the reference's
-    * per-period left-join loop is replaced by a single pivot.
-    */
-  private def buildReport(dfi: DataFrame, periods: Seq[String]): DataFrame = {
+    val prefixes = ReportTypes(reportType)
+    val picked = entries.filter(e => e.code != null && prefixes.exists(e.code.startsWith) &&
+      (e.annual || lastPeriod.contains(e.period)) &&
+      (accLevel == 0 || e.code.count(_ == '.') <= accLevel - 1))
+    val periods = lastYears(picked.map(_.period).distinct.sorted, numYears)
+    val kept = periods.toSet
+    val byCode = picked.filter(e => kept(e.period))
+      .map(e => e.copy(name = translate(e.name))).groupBy(_.code)
+    val rows = byCode.keys.toSeq.sorted(Utf8).map { code =>
+      val es = byCode(code)
+      val byPeriod = es.groupBy(_.period)
+      // na.fill(0.0): null and NaN become 0.0
+      val cells = periods.map(p =>
+        byPeriod.get(p).flatMap(keepLast(_, ByCell).value).filterNot(_.isNaN).getOrElse(0.0))
+      Row(code +: keepLast(es, ByName).name +: cells: _*)
+    }
     def label(p: String): String =
       if (lastPeriodType == "quarterly" && lastPeriod.contains(p)) p + " ltm" else p
-    val index = Kernels.dedupKeepLast(
-      dfi.select("acc_code", "acc_name", "period_end"),
-      keys = Seq("acc_code"),
-      order = Seq(col("period_end"), col("acc_name")))
-      .select("acc_code", "acc_name")
-    // Deterministic cell values: annual wins if an annual row and the
-    // ltm quarter ever share (acc_code, period)
-    val cells = Kernels.dedupKeepLast(
-      dfi.withColumn("p", date_format(col("period_end"), "yyyy-MM-dd")),
-      keys = Seq("acc_code", "p"),
-      order = Seq(col("is_annual"), col("acc_value")))
-    val wide = cells.groupBy("acc_code")
-      .pivot("p", periods)
-      .agg(first("acc_value"))
-    val labeled = periods.foldLeft(wide)((w, p) => w.withColumnRenamed(p, label(p)))
-    // shuffle_hash, not the broadcast the size estimate picks: both
-    // sides descend from the one-partition slice, so the join needs no
-    // exchange, where a broadcast costs a job of its own.
-    index.join(labeled.hint("shuffle_hash"), Seq("acc_code"), "left")
-      .na.fill(0.0, periods.map(label))
-      .orderBy("acc_code")
+    (periods.map(label), rows)
   }
 
-  /** Reference `company.py:479-503` custom_report: union of the three
-    * statements filtered to the requested codes. unionByName with
-    * allowMissingColumns tolerates statements whose period sets
-    * differ (the reference's strict concat would fail there).
+  /** pt -> en account names through FinData's dictionary, with the
+    * reference's "(pt) " fallback prefix for missing translations
+    * (`company.py:425-433`, trap 8). */
+  private def translate(name: String): String =
+    if (language != "English" || name == null) name
+    else data.languageDict.get(name).filter(_ != null).getOrElse("(pt) " + name)
+
+  private def reportFrame(labels: Seq[String], rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(
+      Seq(slice.schema("acc_code"), slice.schema("acc_name")) ++
+        labels.map(StructField(_, DoubleType, nullable = false))))
+
+  /** Reference `company.py:479-503` custom_report: the three
+    * statements' rows, filtered to the requested codes, on the union
+    * of their period labels, zero-filled where a statement lacks one
+    * (the reference's strict concat would fail there).
     */
   def customReport(accList: Seq[String], numYears: Int = 0): DataFrame = {
     val parts = Seq("balance_sheet", "income_statement", "cash_flow")
-      .map(t => report(t, numYears = numYears))
-    val unioned = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    val valueCols = unioned.columns.filterNot(Seq("acc_code", "acc_name").contains)
-    unioned.na.fill(0.0, valueCols.toSeq)
-      .filter(col("acc_code").isin(accList: _*))
+      .map(reportGrid(_, accLevel = 0, numYears))
+    val labels = parts.flatMap(_._1).distinct
+    val wanted = accList.toSet
+    val rows = parts.flatMap { case (ls, rs) =>
+      val at = labels.map(ls.indexOf)
+      rs.filter(r => wanted(r.getString(0))).map(r =>
+        Row(r.get(0) +: r.get(1) +: at.map(i => if (i < 0) 0.0 else r.getDouble(i + 2)): _*))
+    }
+    reportFrame(labels, rows)
   }
 
-  /** Reference `company.py:505-526` indicators(): the company's slice
-    * of the prebuilt indicators frame, formatted wide
-    * (indicator rows x period columns) in display order.
+  /** The company's rows of FinData's indicators, collected on first use. */
+  private lazy val indicatorRows: Array[Row] = data.indicators
+    .filter(col("cvm_id") === cvmId && col("is_consolidated") === isConsolidated)
+    .collect()
+
+  /** Reference `company.py:505-526` indicators() with
+    * `format_indicators` (`indicators.py:162-232`): indicator rows in
+    * display order x period columns, currency indicators divided by
+    * the accounting unit (EPS not), the annual row winning where an
+    * annual and a quarterly row share a period. No fill.
     */
   def indicators(numYears: Int = 0): DataFrame = {
-    val slice = data.indicators.filter(
-      col("cvm_id") === cvmId && col("is_consolidated") === isConsolidated).coalesce(1)
-    val allPeriods = slice
-      .select(date_format(col("period_end"), "yyyy-MM-dd").as("p"))
-      .distinct().orderBy("p").collect().map(_.getString(0)).toSeq
-    val periods = if (numYears > 0) allPeriods.takeRight(numYears) else allPeriods
-    Indicators.formatIndicators(slice, accUnit, periods)
-      .drop("cvm_id", "is_consolidated")
+    val schema = data.indicators.schema
+    val (period, annual) = (schema.fieldIndex("period_end"), schema.fieldIndex("is_annual"))
+    val byPeriod = indicatorRows.toSeq.groupBy(_.get(period).toString)
+      .map { case (p, rs) => p -> rs.find(_.getBoolean(annual)).getOrElse(rs.head) }
+    val periods = lastYears(byPeriod.keys.toSeq.sorted, numYears)
+    val rows = if (indicatorRows.isEmpty) Nil else Indicators.IndicatorOrder.map { name =>
+      val i = schema.fieldIndex(name)
+      val unit = if (Indicators.CurrencyCols.contains(name)) accUnit else 1.0
+      Row(name +: periods.map { p =>
+        val r = byPeriod(p)
+        if (r.isNullAt(i)) null else r.getDouble(i) / unit
+      }: _*)
+    }
+    spark.createDataFrame(rows.asJava, StructType(StructField("indicator", StringType, nullable = false) +:
+      periods.map(StructField(_, DoubleType, nullable = true))))
   }
+
+  private def lastYears(periods: Seq[String], numYears: Int): Seq[String] =
+    if (numYears > 0) periods.takeRight(numYears) else periods
+}
+
+object Company {
+
+  /** One slice row: account, name, unit-scaled value, filing type and
+    * `yyyy-MM-dd` period. */
+  private final case class Entry(
+      code: String, name: String, value: Option[Double], annual: Boolean, period: String)
+
+  /** Spark's string order: UTF-8 bytes, unsigned. */
+  private val Utf8: Ordering[String] = Ordering.by(UTF8String.fromString)
+
+  /** The keep-last orders of `Kernels.dedupKeepLast`, whose descending
+    * sort ranks null lowest. Spark ranks NaN above every value and -0.0
+    * equal to 0.0. */
+  private val SparkDouble: Ordering[Double] = (x, y) => if (x == y) 0 else java.lang.Double.compare(x, y)
+  private val ByName: Ordering[Entry] = Ordering.by((e: Entry) => (e.period, Option(e.name)))(
+    Ordering.Tuple2(Ordering.String, Ordering.Option(Utf8)))
+  private val ByCell: Ordering[Entry] = Ordering.by((e: Entry) => (e.annual, e.value))(
+    Ordering.Tuple2(Ordering.Boolean, Ordering.Option(SparkDouble)))
+
+  /** The greatest entry, the first of tied ones (the first row of a
+    * stable descending sort). */
+  private def keepLast(es: Seq[Entry], ord: Ordering[Entry]): Entry =
+    es.reduceLeft((best, e) => if (ord.gt(e, best)) e else best)
 }

@@ -50,8 +50,8 @@ final case class FinData(
     * FinData's five frames (the company dimension included), measured
     * once per FinData. Scoped to those frames deliberately: a
     * session-wide storage readout would silently include unrelated
-    * persists (ext operators' staged frames, user caches, Company
-    * slices) in a number presented as FinData's footprint.
+    * persists (ext operators' staged frames, user caches) in a number
+    * presented as FinData's footprint.
     */
   def info(dataPath: String = ""): DataFrame = {
     val spark = financials.sparkSession

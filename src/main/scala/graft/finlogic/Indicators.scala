@@ -1,7 +1,6 @@
 package graft.finlogic
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Kernels
 
@@ -173,54 +172,5 @@ object Indicators {
     val quarterly = processIndicators(pivotIndicators(start.filter(!col("is_annual"))), isAnnual = false)
     annual.unionByName(quarterly)
       .orderBy("cvm_id", "is_consolidated", "period_end", "is_annual")
-  }
-
-  /** Reference `adjust_unit` (`indicators.py:162-184`). */
-  def adjustUnit(df: DataFrame, unit: Double): DataFrame = {
-    val present = CurrencyCols.filter(df.columns.contains)
-    df.withColumns(present.map(c => c -> col(c) / unit).toMap)
-  }
-
-  /** Reference `format_indicators` (`indicators.py:221-232`): scale by
-    * unit, unpivot to (indicator, value), pivot periods into columns
-    * (chronological, annual preferred on period collisions), rows in
-    * the fixed display order. `df` is one company's indicator rows, so
-    * the long form (27 rows per period) is coalesced into one
-    * partition, and the dedup window, the pivot and the sort plan with
-    * no exchange. The coalesce sits after the unpivot because its
-    * Expand reports an unknown partitioning, which a coalesce before it
-    * would not carry through.
-    */
-  def formatIndicators(df: DataFrame, unit: Double, periods: Seq[String]): DataFrame = {
-    val meltIdx = Seq("cvm_id", "name_id", "is_annual", "is_consolidated", "period_end")
-    val valueCols = df.columns.filterNot(meltIdx.contains).toSeq
-    val long = Kernels.unpivot(adjustUnit(df, unit), meltIdx, valueCols, "indicator", "value")
-      .coalesce(1)
-      .withColumn("period_str", date_format(col("period_end"), "yyyy-MM-dd"))
-    // Deterministic `first`: prefer the annual row if an annual period
-    // and the quarterly LTM period ever coincide.
-    val deduped = Kernels.dedupKeepLast(long,
-      keys = Seq("cvm_id", "is_consolidated", "indicator", "period_str"),
-      order = Seq(col("is_annual")))
-    val wide = deduped
-      .groupBy("cvm_id", "is_consolidated", "indicator")
-      .pivot("period_str", periods)
-      .agg(first("value"))
-    reorderIndex(wide)
-  }
-
-  /** Reference `reorder_index` (`indicators.py:186-218`): keep the
-    * listed indicators in display order. Each indicator's position is
-    * a literal map lookup with inner-join semantics (unlisted
-    * indicators are dropped, `indicator` leads the columns as a join
-    * key would), then sort.
-    */
-  def reorderIndex(df: DataFrame): DataFrame = {
-    val order = typedLit(IndicatorOrder.zipWithIndex.toMap).apply(col("indicator"))
-    df.select(col("indicator") +: df.columns.filterNot(_ == "indicator").map(col) :+
-        order.as("_order"): _*)
-      .filter(col("_order").isNotNull)
-      .orderBy("cvm_id", "is_consolidated", "_order")
-      .drop("_order")
   }
 }

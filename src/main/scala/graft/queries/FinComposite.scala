@@ -103,9 +103,9 @@ object FinComposite {
       // the full Indicators.build cost landed inside whichever query
       // touched `indicators` first — 8.1 s inside q51's measured time).
       // This is the load phase; per-query timings then measure queries.
+      // The Company collected its slice when it was constructed.
       data.financials.count(); data.trades.count()
       data.language.count(); data.indicators.count()
-      company.df.count()
       (data, company)
     })
 
@@ -185,7 +185,7 @@ object FinComposite {
       |traded AS (SELECT DISTINCT o_custkey AS cvm_id FROM orders WHERE o_totalprice >= 100000)""".stripMargin
 
   /** Company slice with the accounting-unit scaling (EPS exempt),
-    * plus the removeNotLastQuarters filter and last-period facts. */
+    * plus the stale-quarter filter and last-period facts. */
   private val SliceCte =
     """,slice AS (
       |  SELECT acc_code,

@@ -262,6 +262,60 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(rep.count() == 3)
   }
 
+  test("company grids keep Spark's null/NaN/duplicate semantics") {
+    // OMEGA: a NaN and a null value, a null name, an annual and a
+    // quarterly row at one period, two annual rows that differ in value.
+    val omega = Seq[(String, String, Option[Double], Boolean, String)](
+      ("1", "Ativo Total", Some(100.0), true, "2021-12-31"),
+      ("1", "Ativo Total", Some(120.0), true, "2022-12-31"),
+      ("1", "Ativo Total", Some(999.0), false, "2022-12-31"), // the annual row wins
+      ("1.01", "Ativo Circulante", Some(Double.NaN), true, "2021-12-31"),
+      ("1.01", null, Some(40.0), true, "2022-12-31"), // the latest name is null
+      ("2.03", "Patrimonio", None, true, "2021-12-31"),
+      ("2.03", "Patrimonio", Some(50.0), true, "2022-12-31"),
+      ("2.03", "Patrimonio", Some(70.0), true, "2022-12-31"), // the greater value wins
+      ("3.01", "Receita de Venda", Some(80.0), true, "2022-12-31"),
+      ("3.01", "Receita de Venda", Some(Double.NaN), true, "2022-12-31"), // NaN ranks highest
+      ("6.01", "Caixa Operacional", Some(15.0), false, "2022-12-31"))
+      .map { case (code, name, v, annual, p) => (8L, "OMEGA", "88.888", code, name, v, annual, true, p, p) }
+      .toDF("cvm_id", "name_id", "tax_id", "acc_code", "acc_name", "acc_value",
+            "is_annual", "is_consolidated", "period_begin", "period_end")
+      .withColumn("period_begin", to_date($"period_begin"))
+      .withColumn("period_end", to_date($"period_end"))
+    val trades = Seq((8L, "2023-06-01", 300000.0, "energy", false, "OMG3"))
+      .toDF("cvm_id", "trade_date", "volume", "segment", "is_restructuring", "most_traded_stock")
+      .withColumn("trade_date", to_date($"trade_date"))
+    val co = new Company(FinData.build(omega, trades, languageRaw), 8L)
+    def grid(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
+    val periods = Seq("2021-12-31", "2022-12-31")
+
+    val bs = co.report("balance_sheet")
+    assert(bs.columns.toSeq == Seq("acc_code", "acc_name") ++ periods)
+    // na.fill turns both NaN and null into 0.0
+    assert(grid(bs) == Seq(
+      Seq("1", "Total Assets", 100.0, 120.0),
+      Seq("1.01", null, 0.0, 40.0),
+      Seq("2.03", "(pt) Patrimonio", 0.0, 70.0)))
+    assert(grid(co.report("income_statement")) == Seq(Seq("3.01", "Sales Revenue", 0.0)))
+
+    val custom = co.customReport(Seq("1.01", "3.01", "6.01"))
+    assert(custom.columns.toSeq == Seq("acc_code", "acc_name") ++ periods)
+    assert(grid(custom) == Seq(
+      Seq("1.01", null, 0.0, 40.0),
+      Seq("3.01", "Sales Revenue", 0.0, 0.0),
+      Seq("6.01", "(pt) Caixa Operacional", 0.0, 15.0)))
+
+    val ind = co.indicators()
+    assert(ind.columns.toSeq == "indicator" +: periods)
+    val cells = grid(ind).map(r => r.head -> r.tail).toMap
+    // the annual 2022 row wins over the quarterly one (operating cash 15)
+    assert(cells("total_assets") == Seq(100.0, 120.0))
+    assert(cells("operating_cash_flow") == Seq(0.0, 0.0))
+    assert(cells("equity") == Seq(0.0, 70.0))
+    // no fill: the 0/0 tax rate stays NaN
+    assert(cells("effective_tax_rate").forall(_.asInstanceOf[Double].isNaN))
+  }
+
   test("Company.indicators: wide format in display order, unit-scaled") {
     val df = alpha.indicators()
     val inds = df.select("indicator").collect().map(_.getString(0)).toSeq
@@ -371,18 +425,17 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     collect(plan) { case s: InMemoryTableScanExec if s.relation.cachedPlan eq cache.cachedPlan => s }
 
   /** One session's API calls, each with its expected jobs per warm call.
-    * "company" constructs a company whose slice is not cached yet (BETA)
-    * and releases the slice after it. */
+    * "company" constructs a company (BETA), which collects its slice. */
   private def sessionCalls(): Seq[(String, () => Unit, Int)] = {
     val co = new Company(data, 1, accUnitSpec = "m")
     Seq(
       ("searchCompany", () => data.searchCompany("alpha").collect(), 1),
       ("searchSegment", () => data.searchSegment("an").collect(), 1),
       ("rank", () => data.rank().collect(), 2),
-      ("company", () => new Company(data, 2).df.unpersist(blocking = true), 3),
-      ("report", () => co.report("assets").collect(), 2),
-      ("customReport", () => co.customReport(Seq("1", "3.01", "6.01")).collect(), 4),
-      ("indicators", () => co.indicators().collect(), 2),
+      ("company", () => new Company(data, 2), 2),
+      ("report", () => co.report("assets").collect(), 0),
+      ("customReport", () => co.customReport(Seq("1", "3.01", "6.01")).collect(), 0),
+      ("indicators", () => co.indicators().collect(), 0),
       ("info", () => data.info("path").collect(), 1))
   }
 
@@ -391,13 +444,17 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // build included, on the spec fixture at the session's own settings
     // (AQE on, 4 shuffle partitions). Every call runs once first, so the
     // rows count a warm session's calls, after FinData's caches and
-    // dictionary exist. "company" costs the identifier lookup, AQE's job
-    // that fills the slice's cache and the period aggregate. Before the
-    // company dimension and the one-partition slices the rows were 3, 4,
-    // 4, 5, 13, 37, 10 and 14: search and rank window-sorted the fact
-    // table, report and indicators ran one job per shuffle stage plus a
-    // broadcast of the language table, and info re-ran two aggregates
-    // and four counts.
+    // dictionary exist. "company" costs the identifier lookup and the
+    // collect of its slice; report, customReport and indicators build
+    // local frames from the rows the Company holds (indicators collects
+    // its rows on a Company's first call, one job). With the slice a
+    // one-partition cache and Spark report plans the rows were 1, 1, 2,
+    // 3, 2, 4, 2 and 1: "company" also filled the cache and ran a period
+    // aggregate. Before the company dimension and the one-partition
+    // slices they were 3, 4, 4, 5, 13, 37, 10 and 14: search and rank
+    // window-sorted the fact table, report and indicators ran one job
+    // per shuffle stage plus a broadcast of the language table, and
+    // info re-ran two aggregates and four counts.
     val sc = spark.sparkContext
     val cases = sessionCalls()
     cases.foreach(_._2())
@@ -496,6 +553,15 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     FinLogic.info().collect() // materializes the caches
     val frames = loaded.productIterator.collect { case df: DataFrame => df }.toSeq
     val rdds = frames.map(df => cacheOf(df).cacheBuilder.cachedColumnBuffers.id)
+    // Companies and their reconfigured copies cache nothing of their own.
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (co <- Seq(FinLogic.company(1, accUnit = "m"), FinLogic.company(2, isConsolidated = false));
+         c <- Seq(co, co.withUnit("t"), co.withLanguage("portuguese"), co.withTaxRate(0.2),
+           co.withConsolidated(!co.isConsolidated), co.withIdentifier(1))) {
+      c.report("assets").collect(); c.customReport(Seq("1")).collect(); c.indicators().collect()
+    }
+    val grown = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(grown.isEmpty, s"Companies left ${grown.size} persistent RDDs: $grown")
     FinLogic.unload()
     assert(frames.forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
     val persistent = spark.sparkContext.getPersistentRDDs.keySet
