@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
-
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query wall
   * seconds. A warmup pass (session + parquet reader + codegen paths)
@@ -24,35 +20,26 @@ import org.apache.spark.sql.SparkSession
   * would exclude every query's total ORDER BY while Verify (parquet
   * write) pays it.
   *
-  * WATCHDOG (rounds 5 AND 6 each voided the entire artifact when one
-  * query hung — rc=1/rc=124, zero timings recorded): every query runs
-  * on a daemon worker thread with a hard time box
-  * (SPARK_GRAFT_QUERY_TIMEOUT seconds, default 120). On expiry the
-  * query's job group is cancelled, -1 is recorded, and the run moves
-  * on — a dead run still names its killer. Per-query lines print to
-  * stderr as they complete so a killed process leaves a readable
-  * trail. A query that timed out in run 1 is skipped in run 2 (its
-  * cancelled jobs may still be draining; re-running would contaminate
-  * neighbors and cost another full timeout for a known-dead query).
+  * Every query runs through [[QueryRunner]]'s time box
+  * (SPARK_GRAFT_QUERY_TIMEOUT seconds, default 120): a hung query is
+  * cancelled, -1 is recorded, and the run moves on — a dead run still
+  * names its killer. Per-query lines (wall seconds and the query's
+  * jobs, stages and tasks) print to stderr as they complete so a
+  * killed process leaves a readable trail. A query that timed out in
+  * run 1 is skipped in run 2 (its cancelled jobs may still be
+  * draining; re-running would contaminate neighbors and cost another
+  * full timeout for a known-dead query).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // cap plan-string work (see GraftSession) — a lineage bug then
-      // costs truncated strings, not GiB driver allocations. r21: 32 KB
-      // (was 1 MB) — with the UI off the string goes nowhere, yet
-      // SQLExecution renders it for every execution event and AQE
+    val spark = QueryRunner.session(defaultCpus = 32)
+      // r21: cap plan strings at 32 KB (GraftSession's 1 MB defends
+      // against lineage bugs). With the UI off the string goes nowhere,
+      // yet SQLExecution renders it for every execution event and AQE
       // re-renders per replan; q379's cached-heavy plan rendered 8
       // MB-scale strings per bench pass (measured WARNs). Truncation
-      // bounds the rendering work itself; plans/ artifacts come from
-      // Explain sessions, which don't set this cap.
+      // bounds the rendering work itself.
       .config("spark.sql.maxPlanStringLength", (1 << 15).toString)
       // NOTE: each testdata parquet is a single row group, so scan
       // stages are inherently one task here regardless of
@@ -61,6 +48,9 @@ object Bench {
       // inputs arrive in many splits/row groups).
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val runner = new QueryRunner(spark, sfDir)
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
 
     // Warmup: JVM/codegen/reader, not part of any timing. The upper()
     // call forces Spark 4's ICU CollationAwareUTF8String class init
@@ -69,35 +59,20 @@ object Bench {
     // that touches a case-mapping expression.
     spark.range(1000000).selectExpr("sum(id)", "max(upper('warm'))").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    // r21 (r20 verdict item 5): a handful of UNMEASURED small queries
-    // before pass 1 so the first measured pass doesn't absorb the bulk
-    // of first-use JIT/codegen/shuffle-machinery warm-up — r20's
-    // run_totals were 1.50x apart purely from pass-1 warm-up + host
-    // noise, inflating the driver's best-of-2 headline. The warm-up
-    // set spans the common physical-operator classes (hash aggregate,
-    // SMJ/BHJ joins, window, sort, exploded arrays, parquet scan of
-    // each major table); it runs through the same noop sink and its
-    // staged frames are released, so nothing persists into the timed
-    // region. Timing methodology (2 full passes, per-query min, noop
-    // sink) is UNCHANGED.
-    // r22 (r21 verdict item 6): the r21 warm-up set missed the heavy
-    // physical classes — the graph sweep pin/fold machinery
-    // (GraftPartitionedCheckpoint + shuffled-hash sweep joins:
-    // q178 runs pageRankWeighted end to end) and the IVF parquet
-    // write/read + streaming-engine init (q321 exercises partitioned
-    // parquet write, MemoryStream micro-batches and index load) — so
-    // the driver's pass 1 still absorbed their first-use cost
-    // (driver run_totals 1.41x apart). Both additions are UNMEASURED
-    // and write only to fresh Scratch temp dirs (no state survives
-    // into the timed region; Staging released after each).
+    // r21/r22: a handful of UNMEASURED queries before pass 1 so the
+    // first measured pass doesn't absorb the bulk of first-use
+    // JIT/codegen/shuffle-machinery warm-up (r20's run_totals were
+    // 1.50x apart). The set spans the common physical-operator classes
+    // (hash aggregate, SMJ/BHJ joins, window, sort, exploded arrays,
+    // parquet scan of each major table), the graph sweep pin/fold
+    // machinery (q178) and the IVF parquet write/read + streaming
+    // engine (q321). It runs through the same noop sink and runner, so
+    // its staged frames are released and a failure never kills the
+    // run; q321 writes only to fresh Scratch temp dirs.
     for (w <- Seq("q01_pricing_summary", "q04_rank_segments",
                   "q14_trailing_avg", "q62_top_ngrams", "q92_hll_distinct",
                   "q178_textrank_keywords", "q321_ann_stream_append"))
-      SparkEntry.queries.get(w).foreach { fn =>
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Exception => () } // warm-up must never kill the run
-        finally graft.ops.Staging.releaseAll()
-      }
+      SparkEntry.queries.get(w).foreach(fn => runner.run(w, fn)(noop))
     // Load phase: materialize the memoized FinData caches the §2.10
     // composite queries (q48-q51) share, mirroring the reference's own
     // load()/query split (its load_data() runs before any query and
@@ -105,106 +80,43 @@ object Bench {
     // Per-query timings then measure the queries, not the shared load.
     graft.queries.FinComposite.mapped(spark, sfDir)
 
-    // Failed queries report -1 (not their partial wall time) so a
-    // regression can't masquerade as a fast run.
-    // Dev aid: SPARK_GRAFT_QUERIES=q64,q69 restricts the run to the
+    // Dev aid: SPARK_GRAFT_ONLY=q64,q69 restricts the run to the
     // named prefixes. An artifact run MUST cover the full list, so a
     // set filter is shouted to stderr and stamped into the JSON line
     // ("filtered") — a partial artifact self-identifies instead of
     // silently posing as the full suite.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSeq)
-    only.foreach { f =>
-      System.err.println(
-        s"[bench] WARNING: SPARK_GRAFT_QUERIES=${f.mkString(",")} is set — " +
-          "this run covers a SUBSET of the suite and is NOT a valid artifact")
-    }
-    val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "120").toLong
-    // single daemon worker: queries still run one-at-a-time; a hung
-    // query's thread is abandoned (cancelJobGroup interrupts its jobs)
-    // and a fresh worker takes over so the suite keeps moving
-    var worker = Executors.newSingleThreadExecutor { r =>
-      val t = new Thread(r, "bench-query"); t.setDaemon(true); t
-    }
+    val only = QueryRunner.only
+    if (only.nonEmpty) System.err.println(
+      s"[bench] WARNING: SPARK_GRAFT_ONLY=${only.mkString(",")} is set — " +
+        "this run covers a SUBSET of the suite and is NOT a valid artifact")
+    val selected = QueryRunner.select(only)
     val timedOut = scala.collection.mutable.Set[String]()
-    def runOnce(run: Int): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-        .map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok =
-          if (timedOut(name)) false
-          else {
-            val group = s"bench-$name-$run"
-            val task = worker.submit(new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = {
-                // job group is thread-local: set it on the worker so
-                // cancelJobGroup reaches this query's jobs and no others
-                spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-                try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-                finally spark.sparkContext.clearJobGroup()
-              }
-            })
-            try { task.get(timeoutSec, TimeUnit.SECONDS); true }
-            catch {
-              case _: TimeoutException =>
-                spark.sparkContext.cancelJobGroup(group)
-                task.cancel(true)
-                // the old worker may be stuck driver-side (analysis,
-                // not a job) — shut it down NOW (interrupts the
-                // abandoned thread so it can't contend with the next
-                // query's timing) and continue on a fresh one
-                worker.shutdownNow()
-                worker = Executors.newSingleThreadExecutor { r =>
-                  val t = new Thread(r, "bench-query"); t.setDaemon(true); t
-                }
-                timedOut += name
-                System.err.println(s"[bench] $name TIMED OUT after ${timeoutSec}s (recorded -1)")
-                false
-              case e: java.util.concurrent.ExecutionException =>
-                System.err.println(s"[bench] $name failed: ${e.getCause.getMessage}")
-                false
-              case _: InterruptedException =>
-                // the BENCH thread was interrupted mid-wait (stray
-                // signal, test harness). Crashing here would void the
-                // whole artifact — the exact failure the watchdog
-                // exists to prevent — so cancel this query, record -1,
-                // clear the flag and keep the suite moving.
-                spark.sparkContext.cancelJobGroup(group)
-                task.cancel(true)
-                Thread.interrupted()
-                System.err.println(s"[bench] $name interrupted (recorded -1)")
-                false
-            }
-          }
-        val secs = (System.nanoTime() - t0) / 1e9
-        // Staged per-query persists are released between queries so no
-        // MEMORY_AND_DISK blocks leak across measurements.
-        graft.ops.Staging.releaseAll()
-        if (ok) System.err.println(f"[bench] run$run $name%-28s ${secs}%8.2f s")
-        name -> (if (ok) secs else -1.0)
+    // Failed queries report -1 (not their partial wall time) so a
+    // regression can't masquerade as a fast run.
+    def runOnce(run: Int): Seq[(String, Double)] = selected.map { case (name, fn) =>
+      if (timedOut(name)) name -> -1.0
+      else {
+        val r = runner.run(name, fn)(noop)
+        if (r.timedOut) timedOut += name
+        System.err.println(r.failure.fold(
+          f"[bench] run$run $name%-28s ${r.seconds}%8.2f s  jobs=${r.jobs} stages=${r.stages} tasks=${r.tasks}")(
+          e => s"[bench] run$run $name failed (recorded -1): $e"))
+        name -> (if (r.ok) r.seconds else -1.0)
       }
+    }
     val run1 = runOnce(1)
     val run2 = runOnce(2)
     val results = run1.zip(run2).map { case ((name, a), (_, b)) =>
       // min of the successful runs; -1 only if BOTH runs failed
       name -> (if (a < 0) b else if (b < 0) a else math.min(a, b))
     }
-    // JSON string escaping: query names are code-controlled, but
-    // SPARK_GRAFT_QUERIES is user input interpolated into the artifact
-    // — an embedded quote/backslash must not break the JSON line
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
+    val jstr = QueryRunner.json _
     val qs = results.map { case (k, v) => jstr(k) + ":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     def tot(r: Seq[(String, Double)]) = r.map(_._2).filter(_ >= 0).sum
     val runTotals = s"[${tot(run1)},${tot(run2)}]"
-    val filtered = only.map(f => s""","filtered":${jstr(f.mkString(","))}""").getOrElse("")
+    val filtered = if (only.isEmpty) "" else s""","filtered":${jstr(only.mkString(","))}"""
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"run_totals":$runTotals$filtered,"sf":${jstr(sfDir)}}"""
     // The driver captures a BOUNDED TAIL of stdout, which truncated the
     // 119-query line in rounds 9-10 ("parsed": null). Persist the full

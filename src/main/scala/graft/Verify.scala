@@ -1,45 +1,28 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare (scripts/check.py
+  * locally). Each query runs through [[QueryRunner]]'s time box
+  * (SPARK_GRAFT_QUERY_TIMEOUT), so a hung query is one named failure,
+  * not a stalled dump. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = QueryRunner.session(defaultCpus = 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // The oracle goes first: a dump killed part-way still leaves an
+    // oracle for every query it finished.
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${QueryRunner.json(k)}: ${QueryRunner.json(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Dev convenience: SPARK_GRAFT_ONLY=q86,q87 restricts the dump to
     // queries whose name starts with a listed prefix. The driver never
     // sets it, so its runs always dump the full map.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.startsWith)) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // Release per-query staged (persisted) frames so 55 queries in
-      // one session don't accumulate MEMORY_AND_DISK blocks.
-      graft.ops.Staging.releaseAll()
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val runner = new QueryRunner(spark, sfDir)
+    for ((name, fn) <- QueryRunner.select(QueryRunner.only))
+      runner.run(name, fn)(_.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        .failure.foreach(e => System.err.println(s"[verify] $name failed: $e"))
     spark.stop()
   }
 }
