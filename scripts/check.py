@@ -3,10 +3,12 @@
 
 Usage: python3 scripts/check.py <sfDir> <verifyOutDir>
 
-Reads each <verifyOutDir>/<name>/ parquet result (written by
-graft.Verify), runs the matching oracle SQL from oracle_sql.json in
-DuckDB against the same parquet tables, sorts columns by name and rows
-by all columns, and compares values TYPED: rows come from
+Reports each <verifyOutDir>/<name>._FAILED marker (a query that
+failed or timed out in graft.Verify) as FAIL with its cause. Reads
+each <verifyOutDir>/<name>/ parquet result (written by graft.Verify),
+runs the matching oracle SQL from oracle_sql.json in DuckDB against
+the same parquet tables, sorts columns by name and rows by all
+columns, and compares values TYPED: rows come from
 cursor.fetchall() (which keeps decimal.Decimal / int / bool / date
 exactly), never pandas .df() — r14 lesson: .df() coerces both
 DECIMAL(38,0) and HUGEINT to float64, so a DECIMAL-vs-HUGEINT column
@@ -19,6 +21,8 @@ compare exactly (NaN==NaN allowed) so rounding gaps surface.
 import json, os, sys
 from decimal import Decimal
 import duckdb
+
+FAILED = "._FAILED"
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -96,9 +100,19 @@ def main(sf_dir, out_dir):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracles = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+    # graft.Verify writes <name>._FAILED, holding the cause, for a
+    # query that failed or timed out; such a query has no result dir.
+    failed = {f[:-len(FAILED)]: os.path.join(out_dir, f)
+              for f in os.listdir(out_dir) if f.endswith(FAILED)}
     names = sorted([d for d in os.listdir(out_dir)
-                    if os.path.isdir(os.path.join(out_dir, d))])
+                    if os.path.isdir(os.path.join(out_dir, d))
+                    and d not in failed])
     n_pass = n_fail = n_noracle = 0
+    for name, marker in sorted(failed.items()):
+        with open(marker) as f:
+            cause = " ".join(f.read().split())
+        print(f"FAIL {name}: {cause}")
+        n_fail += 1
     for name in names:
         res_glob = os.path.join(out_dir, name, "*.parquet")
         try:

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
   * oracle_sql.json, for the DuckDB oracle compare (scripts/check.py
   * locally). Each query runs through [[QueryRunner]]'s time box
   * (SPARK_GRAFT_QUERY_TIMEOUT), so a hung query is one named failure,
-  * not a stalled dump. */
+  * not a stalled dump: a `<name>._FAILED` file with its cause. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -19,10 +19,20 @@ object Verify {
     // Dev convenience: SPARK_GRAFT_ONLY=q86,q87 restricts the dump to
     // queries whose name starts with a listed prefix. The driver never
     // sets it, so its runs always dump the full map.
+    // A query that fails or times out leaves `<name>._FAILED` holding
+    // its cause, and no result dir, so scripts/check.py names it; a
+    // query that passes removes a marker left by an earlier dump.
     val runner = new QueryRunner(spark, sfDir)
-    for ((name, fn) <- QueryRunner.select(QueryRunner.only))
-      runner.run(name, fn)(_.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
-        .failure.foreach(e => System.err.println(s"[verify] $name failed: $e"))
+    for ((name, fn) <- QueryRunner.select(QueryRunner.only)) {
+      val (result, marker) = (Paths.get(s"$outDir/$name"), Paths.get(s"$outDir/$name._FAILED"))
+      runner.run(name, fn)(_.coalesce(1).write.mode("overwrite").parquet(result.toString)).failure match {
+        case Some(e) =>
+          System.err.println(s"[verify] $name failed: $e")
+          org.apache.commons.io.FileUtils.deleteDirectory(result.toFile)
+          Files.writeString(marker, s"$e\n")
+        case None => Files.deleteIfExists(marker)
+      }
+    }
     spark.stop()
   }
 }

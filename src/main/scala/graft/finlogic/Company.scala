@@ -4,8 +4,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 import Company._
+import SparkOrdering.Utf8
 
 /** Company view over a FinData — Spark re-expression of the
   * reference's `src/finlogic/company.py` Company class. The identifier
@@ -66,30 +66,21 @@ final class Company(
     case _ => throw new IllegalArgumentException("Accounting Unit is invalid")
   }
 
-  val language: String = languageSpec.toLowerCase match {
-    case "english" | "portuguese" => languageSpec.toLowerCase.capitalize
+  // Locale.ROOT: the reference's str.lower does not depend on locale;
+  // under tr_TR the default would turn "ENGLISH" into "englısh".
+  val language: String = languageSpec.toLowerCase(java.util.Locale.ROOT) match {
+    case lang @ ("english" | "portuguese") => lang.capitalize
     case other => throw new IllegalArgumentException(
       s"'$other' not supported. Supported languages: english, portuguese")
   }
 
   /** Identifier resolution (reference `company.py:94-118`): CVM id
     * (number) or tax id (string) against the company dimension, whose
-    * (name_id, tax_id) identity is the one searchCompany shows; a tax
-    * id shared by several companies resolves to the lowest CVM id.
-    * KeyError -> NoSuchElementException. */
-  val (cvmId: Long, taxId: String, nameId: String) = {
-    val byId = identifier match {
-      case i: Int => col("cvm_id") === i.toLong
-      case l: Long => col("cvm_id") === l
-      case s: String => col("tax_id") === s
-      case other => throw new IllegalArgumentException(s"Invalid identifier: $other")
-    }
-    val rows = data.companies.filter(byId).select("cvm_id", "tax_id", "name_id")
-      .orderBy("cvm_id").limit(1).collect()
-    if (rows.isEmpty)
-      throw new NoSuchElementException(s"Company 'identifier' $identifier not found.")
-    (rows(0).getLong(0), rows(0).getString(1), rows(0).getString(2))
-  }
+    * (name_id, tax_id) identity is the one searchCompany shows, on
+    * FinData's driver-side rows; a tax id shared by several companies
+    * resolves to the lowest CVM id. KeyError -> NoSuchElementException. */
+  val (cvmId: Long, taxId: String, nameId: String) = data.lookup(identifier).getOrElse(
+    throw new NoSuchElementException(s"Company 'identifier' $identifier not found."))
 
   private val spark = data.financials.sparkSession
 
@@ -307,17 +298,13 @@ object Company {
   private final case class Entry(
       code: String, name: String, value: Option[Double], annual: Boolean, period: String)
 
-  /** Spark's string order: UTF-8 bytes, unsigned. */
-  private val Utf8: Ordering[String] = Ordering.by(UTF8String.fromString)
-
   /** The keep-last orders of `Kernels.dedupKeepLast`, whose descending
     * sort ranks null lowest. Spark ranks NaN above every value and -0.0
     * equal to 0.0. */
-  private val SparkDouble: Ordering[Double] = (x, y) => if (x == y) 0 else java.lang.Double.compare(x, y)
   private val ByName: Ordering[Entry] = Ordering.by((e: Entry) => (e.period, Option(e.name)))(
     Ordering.Tuple2(Ordering.String, Ordering.Option(Utf8)))
   private val ByCell: Ordering[Entry] = Ordering.by((e: Entry) => (e.annual, e.value))(
-    Ordering.Tuple2(Ordering.Boolean, Ordering.Option(SparkDouble)))
+    Ordering.Tuple2(Ordering.Boolean, Ordering.Option(SparkOrdering.Double)))
 
   /** The greatest entry, the first of tied ones (the first row of a
     * stable descending sort). */

@@ -1,8 +1,14 @@
 package graft.finlogic
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.Locale
+import java.util.regex.Pattern
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.{DateFormatter, DateTimeUtils}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.ops.Kernels
+import SparkOrdering.Utf8
 
 /** Immutable holder of the loaded tables — replaces the reference's
   * five mutable module globals (`src/finlogic/data.py:21-25`) with a
@@ -10,13 +16,30 @@ import graft.ops.Kernels
   * assumes RAM-resident tables. `companies` is the per-company
   * dimension derived from `financials` at load: one row per company
   * with its search identity, its latest-filing keys and the facts
-  * `info` sums, so search, rank, info and Company's identifier lookup
-  * never re-scan the fact table. It and `trades` (one row per company
-  * after the keep-last) are cached in one partition, which bounds them
-  * by the company count and lets every plan over them run without an
-  * exchange: their joins are hinted shuffle_hash, which two
-  * one-partition sides satisfy as they are, where the broadcast the
-  * size estimate picks would cost a job per call.
+  * `info` sums. It and `trades` (one row per company after the
+  * keep-last) are cached in one partition each.
+  *
+  * search, segment search, rank, info and Company's identifier lookup
+  * read only company-sized tables, so they run on the driver, over
+  * rows collected once per FinData: the trades, the dimension with each
+  * company's latest trade, and the indicator rows at each company's
+  * latest filing. Each call returns a local frame, with the schema its
+  * Spark plan had. For rows this few, Spark's per-query price
+  * (analysis, AQE, code generation, a scheduler job) was most of the
+  * cost: on the benchmark's `fin_interactive` workload (4-core host,
+  * traced seed 30) the calls took 121-455 ms each as Spark plans and
+  * take 9-18 ms as local frames, with no job. The answers keep the
+  * plans' semantics:
+  *  - a pattern matches as `rlike` does, by `Matcher.find`, and a null
+  *    field matches nothing;
+  *  - search and rank keep only companies with a trade, as the inner
+  *    join did; rank returns every indicator row of the latest filing
+  *    and filters `is_consolidated` after the join (trap 9);
+  *  - rank sorts as `orderBy(col(rankBy).desc, col("cvm_id"))`: nulls
+  *    last, NaN above every value, -0.0 equal to 0.0; segment search
+  *    sorts strings by their UTF-8 bytes.
+  * The rows are immutable and the lazy vals initialize once, so
+  * several threads may share one FinData.
   */
 final case class FinData(
     financials: DataFrame,
@@ -25,12 +48,37 @@ final case class FinData(
     indicators: DataFrame,
     companies: DataFrame) {
 
+  private def spark: SparkSession = financials.sparkSession
+
   /** The language table as a dictionary, collected once per FinData —
     * the reference's `LANGUAGE_DICT` (`data.py:59-64`). A pt name
     * listed twice keeps its greatest translation. */
   private[finlogic] lazy val languageDict: Map[String, String] =
     language.filter(col("pt").isNotNull).groupBy("pt").agg(max("en"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
+  /** Every trade row, collected once per FinData. */
+  private lazy val tradeRows: Seq[Row] = trades.collect().toSeq
+
+  /** The dimension's rows, each with its latest trade if it has one,
+    * collected once per FinData. */
+  private lazy val companyRows: Seq[(Row, Option[Row])] = {
+    val (tradeId, id) = (trades.schema.fieldIndex("cvm_id"), companies.schema.fieldIndex("cvm_id"))
+    val byId = tradeRows.filterNot(_.isNullAt(tradeId)).map(t => t.getLong(tradeId) -> t).toMap
+    companies.collect().toSeq.map(c => c -> Option.when(!c.isNullAt(id))(c.getLong(id)).flatMap(byId.get))
+  }
+
+  /** The indicator rows, every column, that match a company's
+    * (`cvm_id`, `latest_period_end`, `latest_is_consolidated`),
+    * collected once per FinData and keyed by those three values. */
+  private lazy val latestIndicatorRows: Map[Seq[Any], Seq[Row]] = {
+    val keys = Seq("cvm_id", "period_end", "is_consolidated")
+    val latest = companies.select(col("cvm_id"), col("latest_period_end").as("period_end"),
+      col("latest_is_consolidated").as("is_consolidated"))
+    val at = keys.map(indicators.schema.fieldIndex)
+    indicators.join(latest, keys, "left_semi").select(indicators.columns.map(indicators(_)): _*)
+      .collect().toSeq.groupBy(r => at.map(r.get))
+  }
 
   /** The summed cached size of FinData's own five frames, each
     * materialized once per FinData (a count on a cached frame), after
@@ -42,88 +90,136 @@ final case class FinData(
     frames.map(_.queryExecution.optimizedPlan.stats.sizeInBytes.toLong).sum / 1048576.0
   }
 
-  /** Reference `data.py:70-95` info(): summary key/value frame built
-    * from one tiny aggregate over the company dimension. data_url is a
-    * runtime-environment fact, reported as the source path here;
-    * memory_usage_mb is the Spark analog of the reference's
-    * resident-DataFrame MB (`data.py:81,86`): the cached size of
-    * FinData's five frames (the company dimension included), measured
-    * once per FinData. Scoped to those frames deliberately: a
-    * session-wide storage readout would silently include unrelated
-    * persists (ext operators' staged frames, user caches) in a number
-    * presented as FinData's footprint.
+  private def local(rows: Seq[Row], fields: Seq[StructField]): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(fields))
+
+  /** Reference `data.py:70-95` info(): summary key/value frame of the
+    * company dimension's facts. data_url is a runtime-environment
+    * fact, reported as the source path here; memory_usage_mb is the
+    * Spark analog of the reference's resident-DataFrame MB
+    * (`data.py:81,86`): the cached size of FinData's five frames (the
+    * company dimension included), measured once per FinData. Scoped to
+    * those frames deliberately: a session-wide storage readout would
+    * silently include unrelated persists (ext operators' staged
+    * frames, user caches) in a number presented as FinData's
+    * footprint.
     */
   def info(dataPath: String = ""): DataFrame = {
-    val spark = financials.sparkSession
-    import spark.implicits._
-    val a = companies.agg(
-      coalesce(sum("entries"), lit(0L)),
-      date_format(min("first_period"), "yyyy-MM-dd"),
-      date_format(max("last_period"), "yyyy-MM-dd"),
-      count("cvm_id"),
-      coalesce(sum("reports"), lit(0L))).head()
-    Seq(
-      ("data_url", dataPath),
+    val dims = companyRows.map(_._1)
+    def present(name: String): Seq[Row] = {
+      val i = companies.schema.fieldIndex(name)
+      dims.filterNot(_.isNullAt(i))
+    }
+    def total(name: String): String = present(name).map(_.getAs[Long](name)).sum.toString
+    def day(name: String)(pick: Seq[Int] => Int): String = {
+      val days = present(name).map(r => DateTimeUtils.anyToDays(r.getAs[Any](name)))
+      if (days.isEmpty) null else DateFormatter("yyyy-MM-dd").format(pick(days))
+    }
+    local(Seq(
+      Row("data_url", dataPath),
       // Locale.ROOT: f"" uses the JVM default locale, which renders a
       // comma decimal point under e.g. de_DE and breaks .toDouble parsers.
-      ("memory_usage_mb", String.format(java.util.Locale.ROOT, "%.3f", Double.box(cachedMb))),
-      ("accounting_entries", a.getLong(0).toString),
-      ("number_of_reports", a.getLong(4).toString),
-      ("first_report", a.getString(1)),
-      ("last_report", a.getString(2)),
-      ("number_of_companies", a.getLong(3).toString),
-    ).toDF("key", "FinLogic Info")
+      Row("memory_usage_mb", String.format(Locale.ROOT, "%.3f", Double.box(cachedMb))),
+      Row("accounting_entries", total("entries")),
+      Row("number_of_reports", total("reports")),
+      Row("first_report", day("first_period")(_.min)),
+      Row("last_report", day("last_period")(_.max)),
+      Row("number_of_companies", present("cvm_id").size.toString),
+    ), Seq(StructField("key", StringType), StructField("FinLogic Info", StringType)))
   }
 
-  /** Reference `data.py:98-100` search_segment. */
-  def searchSegment(searchValue: String): DataFrame =
-    trades.select("segment").distinct()
-      .filter(col("segment").rlike(searchValue))
-      .orderBy("segment")
+  /** Reference `data.py:98-100` search_segment: the distinct trade
+    * segments that match, in ascending order. */
+  def searchSegment(searchValue: String): DataFrame = {
+    val segment = trades.schema.fieldIndex("segment")
+    val found = tradeRows.map(_.getString(segment)).filter(FinData.rlike(searchValue)).distinct
+    local(found.sorted(Utf8).map(Row(_)), Seq(trades.schema(segment)))
+  }
 
   /** Reference `data.py:103-149` search_company: one row per company
-    * matching the search, joined with latest-trade info. The universe
-    * is the company dimension's identity.
+    * with a trade matching the search, with its latest-trade info. The
+    * universe is the company dimension's identity; a name search
+    * upper-cases the term as the reference's `str.upper` does, in no
+    * locale.
     */
   def searchCompany(searchValue: String, searchBy: String = "name_id"): DataFrame = {
-    val universe = companies.select("name_id", "cvm_id", "tax_id")
-      .join(trades.hint("shuffle_hash"), Seq("cvm_id"))
-    val filtered = searchBy match {
-      case "name_id" => universe.filter(col("name_id").rlike(searchValue.toUpperCase))
-      case "cvm_id"  => universe.filter(col("cvm_id") === searchValue.trim.toLong)
-      case "tax_id"  => universe.filter(col("tax_id") === searchValue)
-      case "segment" => universe.filter(col("segment").rlike(searchValue))
+    val Seq(name, id, tax) = Seq("name_id", "cvm_id", "tax_id").map(companies.schema.fieldIndex)
+    val Seq(segment, restructuring, stock) =
+      Seq("segment", "is_restructuring", "most_traded_stock").map(trades.schema.fieldIndex)
+    val matches: (Row, Row) => Boolean = searchBy match {
+      case "name_id" =>
+        val p = FinData.rlike(searchValue.toUpperCase(Locale.ROOT)); (c, _) => p(c.getString(name))
+      case "cvm_id" =>
+        val v = searchValue.trim.toLong; (c, _) => !c.isNullAt(id) && c.getLong(id) == v
+      case "tax_id" => (c, _) => searchValue != null && searchValue == c.getString(tax)
+      case "segment" =>
+        val p = FinData.rlike(searchValue); (_, t) => p(t.getString(segment))
       case other => throw new IllegalArgumentException(
         s"Invalid value for 'searchBy' argument: $other")
     }
-    filtered.select("name_id", "cvm_id", "tax_id", "segment",
-                    "is_restructuring", "most_traded_stock")
+    val found = companyRows.collect { case (c, Some(t)) if matches(c, t) =>
+      Row(c.get(name), c.get(id), c.get(tax), t.get(segment), t.get(restructuring), t.get(stock))
+    }
+    local(found, Seq(companies.schema(name), companies.schema(id), companies.schema(tax),
+      trades.schema(segment), trades.schema(restructuring), trades.schema(stock)))
   }
 
-  /** Reference `data.py:152-201` rank(): top-n companies by an
-    * indicator at each company's latest filing. The latest-filing keys
-    * come from the company dimension, so the plan is the dimension
-    * joined with trades in its one partition, then with indicators
-    * (the small side broadcast) -> TakeOrderedAndProject; the fact
-    * table is not read. Note the reference filters
-    * is_consolidated AFTER the joins (trap 9) — preserved.
+  /** Reference `data.py:152-201` rank(): top-n companies with a trade
+    * by an indicator at each company's latest filing, highest first,
+    * ties by ascending cvm_id. The reference filters is_consolidated
+    * AFTER the join (trap 9) — preserved: a company whose latest
+    * filing is of the other method is not ranked. `rankBy` resolves
+    * against the indicators' schema, as a column name does in Spark;
+    * the join keys read as the company's latest-filing values, and
+    * `name_id`, which the join made ambiguous, is refused.
     */
   def rank(segment: Option[String] = None, n: Int = 10,
            rankBy: String = "operating_margin",
            isConsolidated: Boolean = true): DataFrame = {
-    val latestFiling = companies.select(col("cvm_id"), col("latest_name_id").as("name_id"),
-      col("latest_period_end").as("period_end"),
-      col("latest_is_consolidated").as("is_consolidated"))
-    val segFilter = segment.map(sv => col("segment").rlike(sv)).getOrElse(lit(true))
-    latestFiling
-      .join(trades.hint("shuffle_hash"), Seq("cvm_id"))
-      .join(indicators.select("cvm_id", rankBy, "is_consolidated", "period_end"),
-            Seq("cvm_id", "period_end", "is_consolidated"))
-      .filter(segFilter && col("is_consolidated") === isConsolidated)
-      .orderBy(col(rankBy).desc, col("cvm_id"))
-      .limit(n)
-      .select("name_id", "most_traded_stock", "cvm_id", "is_restructuring",
-              "is_consolidated", "segment", "period_end", rankBy)
+    require(n >= 0, s"rank 'n' must be 0 or more, got $n")
+    val byField = indicators.select(rankBy).schema.head // resolution only: no job
+    val resolved = indicators.schema.fieldNames.find(_.equalsIgnoreCase(byField.name))
+      .getOrElse(byField.name)
+    require(resolved != "name_id", "rank 'rankBy' must name an indicator, not name_id")
+    val Seq(cvm, name, period, consolidated) =
+      Seq("cvm_id", "latest_name_id", "latest_period_end", "latest_is_consolidated")
+        .map(companies.schema.fieldIndex)
+    val Seq(stock, restructuring, seg) =
+      Seq("most_traded_stock", "is_restructuring", "segment").map(trades.schema.fieldIndex)
+    val Seq(by, filingCons) = Seq(resolved, "is_consolidated").map(indicators.schema.fieldIndex)
+    val inSegment = segment.fold((_: String) => true)(FinData.rlike)
+    val ranked = companyRows.collect { case (co, Some(t)) if inSegment(t.getString(seg)) =>
+      latestIndicatorRows.getOrElse(Seq(co.get(cvm), co.get(period), co.get(consolidated)), Nil)
+        .collect { case r if r.getBoolean(filingCons) == isConsolidated =>
+          Row(co.get(name), t.get(stock), co.get(cvm), t.get(restructuring), co.get(consolidated),
+            t.get(seg), co.get(period), r.get(by))
+        }
+    }.flatten
+    val ord = Ordering.Tuple2(Ordering.Option(SparkOrdering.of(byField.dataType)).reverse, Ordering.Long)
+    val top = ranked.sortBy(r => (Option(r.get(7)), r.getLong(2)))(ord).take(n)
+    // a join key keeps the company side's field, as the using-join did
+    val keyField = Map("cvm_id" -> cvm, "period_end" -> period, "is_consolidated" -> consolidated)
+      .get(resolved).map(i => companies.schema(i).copy(name = byField.name))
+    local(top, Seq(companies.schema(name).copy(name = "name_id"), trades.schema(stock),
+      companies.schema(cvm), trades.schema(restructuring),
+      companies.schema(consolidated).copy(name = "is_consolidated"), trades.schema(seg),
+      companies.schema(period).copy(name = "period_end"), keyField.getOrElse(byField)))
+  }
+
+  /** The company with `identifier`, a CVM id or a tax id, as its
+    * (cvm_id, tax_id, name_id); a tax id shared by several companies
+    * resolves to the lowest CVM id. */
+  private[finlogic] def lookup(identifier: Any): Option[(Long, String, String)] = {
+    val Seq(id, tax, name) = Seq("cvm_id", "tax_id", "name_id").map(companies.schema.fieldIndex)
+    val (at, key) = identifier match {
+      case i: Int => (id, i.toLong)
+      case l: Long => (id, l)
+      case s: String => (tax, s)
+      case other => throw new IllegalArgumentException(s"Invalid identifier: $other")
+    }
+    companyRows.map(_._1).filter(r => !r.isNullAt(at) && r.get(at) == key)
+      .sortBy(r => Option.when(!r.isNullAt(id))(r.getLong(id))).headOption
+      .map(r => (r.getLong(id), r.getString(tax), r.getString(name)))
   }
 
   def company(identifier: Any,
@@ -142,6 +238,14 @@ final case class FinData(
 }
 
 object FinData {
+
+  /** Spark's `rlike` with the pattern `regex` as a predicate: a
+    * `Matcher.find`; a null pattern or a null field matches nothing. */
+  private def rlike(regex: String): String => Boolean =
+    Option(regex).map(Pattern.compile) match {
+      case Some(p) => s => s != null && p.matcher(s).find()
+      case None => _ => false
+    }
 
   /** Reference `data.py:28-67` load(): read the three tables, keep
     * the latest trade per company above min_volume, optionally

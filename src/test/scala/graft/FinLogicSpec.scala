@@ -19,65 +19,7 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  // ---- fixture ---------------------------------------------------
-  private val Codes = Seq("1", "1.01", "1.01.01", "1.01.02", "2.01", "2.01.04",
-    "2.02.01", "2.03", "3.01", "3.03", "3.05", "3.07", "3.08", "3.11",
-    "6.01", "6.01.01.04", "3.99.01.01")
-  private val Names = Map(
-    "1" -> "Ativo Total", "1.01" -> "Ativo Circulante",
-    "3.01" -> "Receita de Venda").withDefault(c => s"Conta $c")
-
-  // 2020 base values for company ALPHA (consolidated); later years and
-  // quarters are scaled multiples so ratios are hand-checkable.
-  private val Base: Map[String, Double] = Map(
-    "1" -> 100e6, "1.01" -> 40e6, "1.01.01" -> 10e6, "1.01.02" -> 5e6,
-    "2.01" -> 30e6, "2.01.04" -> 8e6, "2.02.01" -> 12e6, "2.03" -> 50e6,
-    "3.01" -> 80e6, "3.03" -> 32e6, "3.05" -> 20e6, "3.07" -> 18e6,
-    "3.08" -> -6e6, "3.11" -> 12e6, "6.01" -> 15e6, "6.01.01.04" -> 5e6,
-    "3.99.01.01" -> 1.5)
-
-  private def rows(cvm: Long, name: String, tax: String, cons: Boolean,
-                   annual: Boolean, period: String, factor: Double) =
-    Codes.map(c => (cvm, name, tax, c, Names(c), Base(c) * factor,
-      annual, cons, period, period))
-
-  private lazy val financialsRaw: DataFrame = {
-    val alphaAnnual = Seq("2020-12-31" -> 1.0, "2021-12-31" -> 1.1, "2022-12-31" -> 1.2)
-      .flatMap { case (p, f) => rows(1L, "ALPHA", "11.111", true, true, p, f) }
-    val alphaQuarterly = Seq("2022-03-31" -> 0.25, "2022-06-30" -> 0.26,
-        "2022-09-30" -> 0.27, "2023-03-31" -> 0.30)
-      .flatMap { case (p, f) => rows(1L, "ALPHA", "11.111", true, false, p, f) }
-    // BETA: tiny company below the 1M cutoff, both accounting methods.
-    val beta = Seq(true, false).flatMap(cons =>
-      Seq("2021-12-31" -> 0.005, "2022-12-31" -> 0.006)
-        .flatMap { case (p, f) => rows(2L, "BETA", "22.222", cons, true, p, f) })
-    // GAMMA: untraded company (excluded when isTraded = true).
-    val gamma = rows(3L, "GAMMA", "33.333", true, true, "2022-12-31", 1.0)
-    // Duplicate filing for ALPHA (cvm,cons,"1",2020): lower value,
-    // quarterly -> dedup keeps the annual/higher row.
-    val dup = Seq((1L, "ALPHA", "11.111", "1", Names("1"), 99e6, false, true,
-      "2020-12-31", "2020-12-31"))
-    (alphaAnnual ++ alphaQuarterly ++ beta ++ gamma ++ dup)
-      .toDF("cvm_id", "name_id", "tax_id", "acc_code", "acc_name", "acc_value",
-            "is_annual", "is_consolidated", "period_begin", "period_end")
-      .withColumn("period_begin", to_date($"period_begin"))
-      .withColumn("period_end", to_date($"period_end"))
-  }
-
-  private lazy val tradesRaw: DataFrame = Seq(
-    (1L, "2023-01-01", 500000.0, "oil and gas", false, "ALPH3"),
-    (1L, "2023-06-01", 900000.0, "oil and gas", false, "ALPH4"), // latest wins
-    (2L, "2023-06-01", 200000.0, "banking", true, "BETA3"),
-    (4L, "2023-06-01", 50000.0, "mining", false, "DELT3"), // below min volume
-  ).toDF("cvm_id", "trade_date", "volume", "segment", "is_restructuring",
-         "most_traded_stock")
-    .withColumn("trade_date", to_date($"trade_date"))
-
-  private lazy val languageRaw: DataFrame = Seq(
-    ("Ativo Total", "Total Assets"),
-    ("Ativo Circulante", "Current Assets"),
-    ("Receita de Venda", "Sales Revenue"),
-  ).toDF("pt", "en")
+  import FinFixture._
 
   private lazy val data: FinData = FinData.build(financialsRaw, tradesRaw, languageRaw)
 
@@ -146,12 +88,8 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("indicators: zero-filled missing accounts give IEEE NaN/Inf tax rate, not an ANSI error") {
     // A company reporting only total assets: ebt pivots to 0 ->
     // effective_tax_rate = -0/0 = NaN (reference Polars semantics).
-    val sparse = Seq((7L, "SPARSE", "77", "1", "Ativo", 5e6, true, true,
-        "2022-12-31", "2022-12-31"))
-      .toDF("cvm_id", "name_id", "tax_id", "acc_code", "acc_name", "acc_value",
-            "is_annual", "is_consolidated", "period_begin", "period_end")
-      .withColumn("period_begin", to_date($"period_begin"))
-      .withColumn("period_end", to_date($"period_end"))
+    val sparse = financialsFrame(Seq((7L, "SPARSE", "77", "1", "Ativo", 5e6, true, true,
+        "2022-12-31", "2022-12-31")))
     val out = Indicators.build(sparse).head()
     assert(out.getAs[Double]("effective_tax_rate").isNaN)
   }
@@ -282,9 +220,7 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
             "is_annual", "is_consolidated", "period_begin", "period_end")
       .withColumn("period_begin", to_date($"period_begin"))
       .withColumn("period_end", to_date($"period_end"))
-    val trades = Seq((8L, "2023-06-01", 300000.0, "energy", false, "OMG3"))
-      .toDF("cvm_id", "trade_date", "volume", "segment", "is_restructuring", "most_traded_stock")
-      .withColumn("trade_date", to_date($"trade_date"))
+    val trades = tradesFrame(Seq((8L, "2023-06-01", 300000.0, "energy", false, "OMG3")))
     val co = new Company(FinData.build(omega, trades, languageRaw), 8L)
     def grid(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
     val periods = Seq("2021-12-31", "2022-12-31")
@@ -429,57 +365,63 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def sessionCalls(): Seq[(String, () => Unit, Int)] = {
     val co = new Company(data, 1, accUnitSpec = "m")
     Seq(
-      ("searchCompany", () => data.searchCompany("alpha").collect(), 1),
-      ("searchSegment", () => data.searchSegment("an").collect(), 1),
-      ("rank", () => data.rank().collect(), 2),
-      ("company", () => new Company(data, 2), 2),
+      ("searchCompany", () => data.searchCompany("alpha").collect(), 0),
+      ("searchSegment", () => data.searchSegment("an").collect(), 0),
+      ("rank", () => data.rank().collect(), 0),
+      ("company", () => new Company(data, 2), 1),
       ("report", () => co.report("assets").collect(), 0),
       ("customReport", () => co.customReport(Seq("1", "3.01", "6.01")).collect(), 0),
       ("indicators", () => co.indicators().collect(), 0),
-      ("info", () => data.info("path").collect(), 1))
+      ("info", () => data.info("path").collect(), 0))
   }
 
   test("API calls: scheduler jobs per call stay pinned (table over every call)") {
     // One row per API call: the listener-counted jobs of one call,
     // build included, on the spec fixture at the session's own settings
     // (AQE on, 4 shuffle partitions). Every call runs once first, so the
-    // rows count a warm session's calls, after FinData's caches and
-    // dictionary exist. "company" costs the identifier lookup and the
-    // collect of its slice; report, customReport and indicators build
-    // local frames from the rows the Company holds (indicators collects
-    // its rows on a Company's first call, one job). With the slice a
-    // one-partition cache and Spark report plans the rows were 1, 1, 2,
-    // 3, 2, 4, 2 and 1: "company" also filled the cache and ran a period
-    // aggregate. Before the company dimension and the one-partition
-    // slices they were 3, 4, 4, 5, 13, 37, 10 and 14: search and rank
-    // window-sorted the fact table, report and indicators ran one job
-    // per shuffle stage plus a broadcast of the language table, and
-    // info re-ran two aggregates and four counts.
-    val sc = spark.sparkContext
+    // rows count a warm session's calls, after FinData's caches, its
+    // dictionary and its driver-side company and latest-filing rows
+    // exist. "company" costs the collect of its slice; search, segment
+    // search, rank, info and the identifier lookup read FinData's
+    // driver-side rows, and report, customReport and indicators the rows
+    // the Company holds (indicators collects its rows on a Company's
+    // first call, one job). With Spark plans for search, segment search,
+    // rank, info and the lookup the rows were 1, 1, 2, 2, 0, 0, 0 and 1.
+    // With the slice a one-partition cache and Spark report plans they
+    // were 1, 1, 2, 3, 2, 4, 2 and 1: "company" also filled the cache and
+    // ran a period aggregate. Before the company dimension and the
+    // one-partition slices they were 3, 4, 4, 5, 13, 37, 10 and 14:
+    // search and rank window-sorted the fact table, report and
+    // indicators ran one job per shuffle stage plus a broadcast of the
+    // language table, and info re-ran two aggregates and four counts.
     val cases = sessionCalls()
     cases.foreach(_._2())
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p =>
-            Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
-    }
-    org.apache.spark.ListenerDrain.drain(sc)
-    sc.addSparkListener(listener)
-    val measured = try cases.map { case (name, run, _) =>
-      val group = s"finlogic_jobs_$name"
-      sc.setJobGroup(group, group)
-      try run() finally sc.clearJobGroup()
-      org.apache.spark.ListenerDrain.drain(sc)
-      name -> Option(jobs.get(group)).map(_.intValue).getOrElse(0)
-    } finally sc.removeSparkListener(listener)
+    val measured = cases.map { case (name, run, _) => name -> jobsOf(s"finlogic_jobs_$name")(run()) }
     val expected = cases.map { case (name, _, n) => name -> n }
     assert(measured == expected,
       "per-call job counts moved:\n" + measured.zip(expected).collect {
         case ((n, got), (_, want)) if got != want => s"  $n: $want -> $got"
       }.mkString("\n"))
+  }
+
+  /** The scheduler jobs that `run` starts, counted under job group `group`. */
+  private def jobsOf(group: String)(run: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p => p.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try run finally sc.clearJobGroup()
+      org.apache.spark.ListenerDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
   }
 
   test("a repeated session compiles no generated class") {
@@ -497,6 +439,26 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"${compiles.getCount - before} classes compiled again in a repeated session")
   }
 
+  test("four threads of sessions on one FinData answer as a sequential run") {
+    // A new FinData, so the threads also race to collect its driver-side
+    // rows and dictionary; each thread runs a whole session per company.
+    val shared = FinData.build(financialsRaw, tradesRaw, languageRaw)
+    def session(d: FinData, id: Any): Seq[Seq[String]] = {
+      val co = d.company(id, accUnit = "m")
+      Seq(d.searchCompany("a"), d.searchSegment("an"), d.rank(), co.report("assets"),
+          co.customReport(Seq("1", "3.01", "6.01")), co.indicators(), co.info(), d.info("path"))
+        .map(_.collect().map(_.toString).toSeq)
+    }
+    val ids = Seq[Any](1, "22.222", 2L, 1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(ids.size)
+    val concurrent = try ids.map(id => pool.submit(() => session(shared, id)))
+      .map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+    finally pool.shutdownNow()
+    val fresh = FinData.build(financialsRaw, tradesRaw, languageRaw)
+    val sequential = ids.map(session(fresh, _))
+    assert(concurrent == sequential)
+  }
+
   test("plan shape: company plans shuffle nothing, translation broadcasts nothing, " +
        "search and rank skip the fact table") {
     val co = new Company(data, 1, accUnitSpec = "m")
@@ -509,10 +471,18 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       case b: BroadcastExchangeExec if scans(b, language).nonEmpty => b
     }
     assert(translations.isEmpty, s"report broadcasts the language table:\n$report")
-    val financials = cacheOf(data.financials)
-    for ((name, df) <- Seq("searchCompany" -> data.searchCompany("alpha"), "rank" -> data.rank())) {
-      val plan = executed(df)
-      assert(scans(plan, financials).isEmpty, s"$name scans the financials cache:\n$plan")
+    // FinData's session calls build local frames: once its driver-side
+    // rows exist, their executed plans read no cache and run no job
+    val calls = Seq("searchCompany" -> (() => data.searchCompany("alpha")),
+      "searchSegment" -> (() => data.searchSegment("an")),
+      "rank" -> (() => data.rank()), "info" -> (() => data.info("path")))
+    calls.foreach(_._2().collect())
+    for ((name, call) <- calls) {
+      var plan: SparkPlan = null
+      val jobs = jobsOf(s"finlogic_plan_$name") { plan = executed(call()) }
+      assert(jobs == 0, s"$name ran $jobs jobs:\n$plan")
+      assert(collect(plan) { case s: InMemoryTableScanExec => s }.isEmpty,
+        s"$name scans a cache:\n$plan")
     }
   }
 
@@ -524,14 +494,8 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val zeta = rows(5L, "ZETA OLD", "55.555", true, true, "2021-12-31", 1.0) ++
       rows(5L, "ZETA NEW", "55.555", true, true, "2022-12-31", 1.2).take(8) ++
       rows(5L, "ZETA OLD", "55.555", true, true, "2022-12-31", 1.2).drop(8)
-    val fin = zeta.toDF("cvm_id", "name_id", "tax_id", "acc_code", "acc_name", "acc_value",
-        "is_annual", "is_consolidated", "period_begin", "period_end")
-      .withColumn("period_begin", to_date($"period_begin"))
-      .withColumn("period_end", to_date($"period_end"))
-      .repartition(4, $"acc_code")
-    val trades = Seq((5L, "2023-06-01", 300000.0, "retail", false, "ZETA3"))
-      .toDF("cvm_id", "trade_date", "volume", "segment", "is_restructuring", "most_traded_stock")
-      .withColumn("trade_date", to_date($"trade_date"))
+    val fin = financialsFrame(zeta).repartition(4, $"acc_code")
+    val trades = tradesFrame(Seq((5L, "2023-06-01", 300000.0, "retail", false, "ZETA3")))
     val d = FinData.build(fin, trades, languageRaw)
     val found = d.searchCompany("ZETA").collect()
     assert(found.length == 1)
