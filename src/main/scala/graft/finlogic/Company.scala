@@ -2,7 +2,6 @@ package graft.finlogic
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import Company._
 import SparkOrdering.Utf8
@@ -14,15 +13,28 @@ import SparkOrdering.Utf8
   * The company's slice lives on the driver, as the reference's eager
   * frame does (`_set_df`, `company.py:248-281`). It holds one company's
   * filings: at most periods x codes x 2 rows, about 3k for the largest
-  * reference company. The constructor collects it once, from a Spark
-  * filter and projection over the cached financials, and `report`,
-  * `customReport` and `indicators` build their grids from it in plain
-  * Scala and return local frames. For rows this few, Spark's per-query
-  * price (analysis, AQE, code generation, a scheduler job) was most of
-  * the cost: on the benchmark's `fin_interactive` workload (4-core
-  * host, traced seed 30) a session's report fell from 442 to 15 ms, its
-  * custom report from 1,062 to 15 ms, and the session ran 8 jobs
-  * instead of 16.
+  * reference company. The constructor reads it once, and `indicators`
+  * reads the company's indicator rows on its first call; `report`,
+  * `customReport` and `indicators` build their grids from those rows in
+  * plain Scala and return local frames. For rows this few, Spark's
+  * per-query price (analysis, AQE, code generation, a scheduler job)
+  * was most of the cost: on the benchmark's `fin_interactive` workload
+  * (4-core host, traced seed 30) a session's report fell from 442 to
+  * 15 ms, its custom report from 1,062 to 15 ms, and the session ran 8
+  * jobs instead of 16.
+  *
+  * Both reads skip Catalyst. Each is one Spark job over an RDD that
+  * FinData plans once (`FinData.Planned`), a scan of its cache that
+  * filters on `cvm_id` and `is_consolidated` in plain Scala. A Dataset
+  * filter on a `cvm_id` literal paid analysis, optimization and an AQE
+  * pass on every call, and compiled three new classes for each new
+  * company, because the literal is written into the generated Java;
+  * the job alone compiles nothing. Traced `fin_interactive` (4-core
+  * host, seeds 811-812): the constructor fell from 417-427 to
+  * 137-149 ms and the first `indicators` from 327-453 to 139-155 ms.
+  * The read scans every cached batch: the literal filter could skip
+  * batches by their `cvm_id` bounds, which pays only where the cache
+  * holds companies in long runs.
   *
   * The grids keep the answers of the Spark plans they replace:
   *  - report and custom-report cells are `na.fill(0.0)`-ed, which
@@ -84,27 +96,37 @@ final class Company(
 
   private val spark = data.financials.sparkSession
 
+  /** The slice's columns: the planned financials without their two
+    * keys. Spark's unit division made `acc_value` nullable. */
+  private val sliceSchema: StructType = StructType(data.plannedFinancials.frame.schema.drop(2)
+    .map(f => if (f.name == "acc_value") f.copy(nullable = true) else f))
+
   /** Company slice with EPS-exempt unit scaling (reference
     * `company.py:248-281`, trap 1: acc_code prefix "3.99" is never
-    * divided by the accounting unit): a filter and projection over the
-    * cached financials, collected once.
+    * divided by the accounting unit), read once from FinData's planned
+    * financials. The scaling keeps the answers of the Spark column it
+    * replaces, `when(!acc_code.startsWith("3.99"), acc_value / unit)
+    * .otherwise(acc_value)`: a null acc_code leaves the value unscaled,
+    * as `when(null)` falls through to `otherwise`, and a null value
+    * stays null.
     */
-  private val slice: DataFrame = data.financials
-    .filter(col("cvm_id") === cvmId && col("is_consolidated") === isConsolidated)
-    .withColumn("acc_value",
-      when(!col("acc_code").startsWith("3.99"), col("acc_value") / accUnit)
-        .otherwise(col("acc_value")))
-    .drop("name_id", "cvm_id", "tax_id", "is_consolidated")
-
-  private val sliceRows: Array[Row] = slice.collect()
+  private val sliceRows: Seq[Row] = {
+    val (code, value) = (sliceSchema.fieldIndex("acc_code"), sliceSchema.fieldIndex("acc_value"))
+    data.plannedFinancials.companyRows(cvmId, isConsolidated).map { r =>
+      val cells = r.toSeq.drop(2).toArray
+      if (cells(code) != null && cells(value) != null && !cells(code).asInstanceOf[String].startsWith("3.99"))
+        cells(value) = cells(value).asInstanceOf[Double] / accUnit
+      Row.fromSeq(cells.toSeq)
+    }
+  }
 
   /** The slice as a local frame, in the order of the financials cache. */
-  val df: DataFrame = spark.createDataFrame(sliceRows.toSeq.asJava, slice.schema)
+  val df: DataFrame = spark.createDataFrame(sliceRows.asJava, sliceSchema)
 
   private val entries: Seq[Entry] = {
     val Seq(code, name, value, annual, period) =
-      Seq("acc_code", "acc_name", "acc_value", "is_annual", "period_end").map(slice.schema.fieldIndex)
-    sliceRows.toSeq.map(r => Entry(r.getString(code), r.getString(name),
+      Seq("acc_code", "acc_name", "acc_value", "is_annual", "period_end").map(sliceSchema.fieldIndex)
+    sliceRows.map(r => Entry(r.getString(code), r.getString(name),
       Option.when(!r.isNullAt(value))(r.getDouble(value)), r.getBoolean(annual), r.get(period).toString))
   }
 
@@ -237,7 +259,7 @@ final class Company(
 
   private def reportFrame(labels: Seq[String], rows: Seq[Row]): DataFrame =
     spark.createDataFrame(rows.asJava, StructType(
-      Seq(slice.schema("acc_code"), slice.schema("acc_name")) ++
+      Seq(sliceSchema("acc_code"), sliceSchema("acc_name")) ++
         labels.map(StructField(_, DoubleType, nullable = false))))
 
   /** Reference `company.py:479-503` custom_report: the three
@@ -258,10 +280,9 @@ final class Company(
     reportFrame(labels, rows)
   }
 
-  /** The company's rows of FinData's indicators, collected on first use. */
-  private lazy val indicatorRows: Array[Row] = data.indicators
-    .filter(col("cvm_id") === cvmId && col("is_consolidated") === isConsolidated)
-    .collect()
+  /** The company's rows of FinData's indicators, read on first use. */
+  private lazy val indicatorRows: Seq[Row] =
+    data.plannedIndicators.companyRows(cvmId, isConsolidated)
 
   /** Reference `company.py:505-526` indicators() with
     * `format_indicators` (`indicators.py:162-232`): indicator rows in
@@ -272,7 +293,7 @@ final class Company(
   def indicators(numYears: Int = 0): DataFrame = {
     val schema = data.indicators.schema
     val (period, annual) = (schema.fieldIndex("period_end"), schema.fieldIndex("is_annual"))
-    val byPeriod = indicatorRows.toSeq.groupBy(_.get(period).toString)
+    val byPeriod = indicatorRows.groupBy(_.get(period).toString)
       .map { case (p, rs) => p -> rs.find(_.getBoolean(annual)).getOrElse(rs.head) }
     val periods = lastYears(byPeriod.keys.toSeq.sorted, numYears)
     val rows = if (indicatorRows.isEmpty) Nil else Indicators.IndicatorOrder.map { name =>

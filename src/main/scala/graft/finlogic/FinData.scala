@@ -3,10 +3,13 @@ package graft.finlogic
 import java.util.Locale
 import java.util.regex.Pattern
 import scala.jdk.CollectionConverters._
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.catalyst.util.{DateFormatter, DateTimeUtils}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import graft.ops.Kernels
 import SparkOrdering.Utf8
 
@@ -38,6 +41,16 @@ import SparkOrdering.Utf8
   *  - rank sorts as `orderBy(col(rankBy).desc, col("cvm_id"))`: nulls
   *    last, NaN above every value, -0.0 equal to 0.0; segment search
   *    sorts strings by their UTF-8 bytes.
+  *
+  * Company's two reads, its slice and its indicator rows, go through
+  * `plannedFinancials` and `plannedIndicators`: projections of the
+  * financials and indicators caches whose executed plans, scans of the
+  * caches, are built once per FinData. A read is one Spark job that
+  * filters one company's rows in plain Scala; it runs no Catalyst pass,
+  * no AQE and no code generation of its own, which a Dataset filter on
+  * a `cvm_id` literal paid on every call (see Company). After
+  * `unpersist` the plans still run, by recomputing the caches' lineage.
+  *
   * The rows are immutable and the lazy vals initialize once, so
   * several threads may share one FinData.
   */
@@ -79,6 +92,14 @@ final case class FinData(
     indicators.join(latest, keys, "left_semi").select(indicators.columns.map(indicators(_)): _*)
       .collect().toSeq.groupBy(r => at.map(r.get))
   }
+
+  /** Company's reads, each planned once per FinData: `financials`
+    * projected to the slice's columns behind the two keys a read filters
+    * on, and the indicators with every column. */
+  private[graft] lazy val plannedFinancials: FinData.Planned = new FinData.Planned(financials,
+    Seq("cvm_id", "is_consolidated") ++ financials.columns.diff(FinData.NotInSlice))
+  private[graft] lazy val plannedIndicators: FinData.Planned =
+    new FinData.Planned(indicators, indicators.columns.toSeq)
 
   /** The summed cached size of FinData's own five frames, each
     * materialized once per FinData (a count on a cached frame), after
@@ -168,25 +189,27 @@ final case class FinData(
     * by an indicator at each company's latest filing, highest first,
     * ties by ascending cvm_id. The reference filters is_consolidated
     * AFTER the join (trap 9) — preserved: a company whose latest
-    * filing is of the other method is not ranked. `rankBy` resolves
-    * against the indicators' schema, as a column name does in Spark;
-    * the join keys read as the company's latest-filing values, and
-    * `name_id`, which the join made ambiguous, is refused.
+    * filing is of the other method is not ranked. `rankBy` names a
+    * double column of the indicators, matched as Spark matches a column
+    * name (case-insensitively unless `spark.sql.caseSensitive`), and
+    * names the answer's column as given, as `select(rankBy)` did; a key
+    * or text column, or no column, is refused.
     */
   def rank(segment: Option[String] = None, n: Int = 10,
            rankBy: String = "operating_margin",
            isConsolidated: Boolean = true): DataFrame = {
     require(n >= 0, s"rank 'n' must be 0 or more, got $n")
-    val byField = indicators.select(rankBy).schema.head // resolution only: no job
-    val resolved = indicators.schema.fieldNames.find(_.equalsIgnoreCase(byField.name))
-      .getOrElse(byField.name)
-    require(resolved != "name_id", "rank 'rankBy' must name an indicator, not name_id")
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    val byField = indicators.schema.find(f =>
+      if (caseSensitive) f.name == rankBy else f.name.equalsIgnoreCase(rankBy))
+      .filter(_.dataType == DoubleType).getOrElse(throw new IllegalArgumentException(
+        s"rank 'rankBy' must name a double indicator column, got $rankBy"))
     val Seq(cvm, name, period, consolidated) =
       Seq("cvm_id", "latest_name_id", "latest_period_end", "latest_is_consolidated")
         .map(companies.schema.fieldIndex)
     val Seq(stock, restructuring, seg) =
       Seq("most_traded_stock", "is_restructuring", "segment").map(trades.schema.fieldIndex)
-    val Seq(by, filingCons) = Seq(resolved, "is_consolidated").map(indicators.schema.fieldIndex)
+    val Seq(by, filingCons) = Seq(byField.name, "is_consolidated").map(indicators.schema.fieldIndex)
     val inSegment = segment.fold((_: String) => true)(FinData.rlike)
     val ranked = companyRows.collect { case (co, Some(t)) if inSegment(t.getString(seg)) =>
       latestIndicatorRows.getOrElse(Seq(co.get(cvm), co.get(period), co.get(consolidated)), Nil)
@@ -195,15 +218,12 @@ final case class FinData(
             t.get(seg), co.get(period), r.get(by))
         }
     }.flatten
-    val ord = Ordering.Tuple2(Ordering.Option(SparkOrdering.of(byField.dataType)).reverse, Ordering.Long)
-    val top = ranked.sortBy(r => (Option(r.get(7)), r.getLong(2)))(ord).take(n)
-    // a join key keeps the company side's field, as the using-join did
-    val keyField = Map("cvm_id" -> cvm, "period_end" -> period, "is_consolidated" -> consolidated)
-      .get(resolved).map(i => companies.schema(i).copy(name = byField.name))
+    val ord = Ordering.Tuple2(Ordering.Option(SparkOrdering.Double).reverse, Ordering.Long)
+    val top = ranked.sortBy(r => (Option.when(!r.isNullAt(7))(r.getDouble(7)), r.getLong(2)))(ord).take(n)
     local(top, Seq(companies.schema(name).copy(name = "name_id"), trades.schema(stock),
       companies.schema(cvm), trades.schema(restructuring),
       companies.schema(consolidated).copy(name = "is_consolidated"), trades.schema(seg),
-      companies.schema(period).copy(name = "period_end"), keyField.getOrElse(byField)))
+      companies.schema(period).copy(name = "period_end"), byField.copy(name = rankBy)))
   }
 
   /** The company with `identifier`, a CVM id or a tax id, as its
@@ -246,6 +266,34 @@ object FinData {
       case Some(p) => s => s != null && p.matcher(s).find()
       case None => _ => false
     }
+
+  /** The financials columns a Company's slice leaves out. */
+  private val NotInSlice = Seq("name_id", "cvm_id", "tax_id", "is_consolidated")
+
+  /** A projection of a cached frame, planned once: `rdd` is its executed
+    * plan, a scan of the cache. [[companyRows]] reads one company's rows
+    * from it with a plain Spark job, so the read pays no analysis,
+    * optimization, AQE pass or code generation of its own. */
+  private[graft] final class Planned(cached: DataFrame, columns: Seq[String]) {
+    val frame: DataFrame = cached.select(columns.map(cached(_)): _*)
+    lazy val rdd: RDD[InternalRow] = frame.queryExecution.toRdd
+    private lazy val encoder = encoderFor(frame.encoder).resolveAndBind()
+
+    /** The rows whose `cvm_id` is `cvmId` and whose `is_consolidated` is
+      * `isConsolidated`, as `collect()` returns them, in the cache's
+      * order: `runJob` returns the partitions in index order. The task
+      * filters in plain Scala, captures only primitives and copies the
+      * matches; the frame's own encoder turns them into Rows. */
+    private[finlogic] def companyRows(cvmId: Long, isConsolidated: Boolean): Seq[Row] = {
+      val Seq(id, cons) = Seq("cvm_id", "is_consolidated").map(frame.schema.fieldIndex)
+      val parts = frame.sparkSession.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) =>
+        rows.filter(r => !r.isNullAt(id) && r.getLong(id) == cvmId &&
+            !r.isNullAt(cons) && r.getBoolean(cons) == isConsolidated)
+          .map(_.copy()).toArray)
+      val toRow = encoder.createDeserializer() // one per call: a deserializer is not thread-safe
+      parts.toSeq.flatMap(_.map(toRow))
+    }
+  }
 
   /** Reference `data.py:28-67` load(): read the three tables, keep
     * the latest trade per company above min_volume, optionally

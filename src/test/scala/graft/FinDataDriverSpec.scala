@@ -173,12 +173,14 @@ class FinDataDriverSpec extends AnyFunSuite {
          cons <- Seq(true, false); n <- Seq(0, 1, 10))
       sameOrdered(s"$label $segment $cons $n", d.rank(segment, n, "operating_margin", cons),
         Oracle.rank(d, segment, n, "operating_margin", cons))
-    // other indicators, a case-insensitive name and the join keys
-    for ((label, d) <- datas;
-         by <- Seq("roic", "effective_tax_rate", "OPERATING_MARGIN", "is_annual",
-                   "cvm_id", "period_end", "is_consolidated"))
+    // other indicators and a case-insensitive name
+    for ((label, d) <- datas; by <- Seq("roic", "effective_tax_rate", "OPERATING_MARGIN"))
       sameOrdered(s"$label $by", d.rank(None, 10, by, true), Oracle.rank(d, None, 10, by, true))
-    intercept[org.apache.spark.sql.AnalysisException](traded.rank(rankBy = "no_such_indicator"))
+    // rankBy names a double indicator: a join key, a flag, a text column
+    // or no column is refused at the call
+    for (by <- Seq("is_annual", "cvm_id", "period_end", "is_consolidated", "name_id",
+                   "no_such_indicator"))
+      intercept[IllegalArgumentException](traded.rank(rankBy = by))
   }
 
   test("info equals its Spark aggregate, on loaded and on empty data") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -437,6 +437,52 @@ class FinLogicSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     calls.foreach(_._2())
     assert(compiles.getCount == before,
       s"${compiles.getCount - before} classes compiled again in a repeated session")
+  }
+
+  test("a Company for a new company and method compiles no generated class") {
+    // ETA (cvm 6) files under both methods and is in no other spec, so
+    // no class another test compiled can serve a plan over its id.
+    val eta = Seq(true, false).flatMap(cons => Seq("2021-12-31" -> 2.0, "2022-12-31" -> 2.2)
+      .flatMap { case (p, f) => rows(6L, "ETA", "66.666", cons, true, p, f) })
+    val d = FinData.build(financialsRaw.unionByName(financialsFrame(eta)),
+      tradesRaw.unionByName(tradesFrame(Seq((6L, "2023-06-01", 400000.0, "retail", false, "ETA3")))),
+      languageRaw)
+    val warm = d.company(1, accUnit = "m")
+    Seq(d.searchCompany("alpha"), d.rank(), warm.report("assets"), warm.customReport(Seq("1")),
+      warm.indicators(), warm.info(), d.info("path")).foreach(_.collect())
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val co = d.company(6L, isConsolidated = false, accUnit = "t")
+    val grid = co.indicators().collect()
+    assert(compiles.getCount == before,
+      s"${compiles.getCount - before} classes compiled for a new company's slice and indicators")
+    assert(co.accountingRows == 2L * Codes.size && grid.length == Indicators.IndicatorOrder.size)
+  }
+
+  test("Company reads FinData's caches through plans built once, and after an unload") {
+    val dir = java.nio.file.Files.createTempDirectory("finlogic").toString
+    financialsRaw.write.mode("overwrite").parquet(s"$dir/fin")
+    tradesRaw.write.mode("overwrite").parquet(s"$dir/trades")
+    languageRaw.write.mode("overwrite").parquet(s"$dir/lang")
+    val d = FinData.load(spark, s"$dir/fin", s"$dir/trades", s"$dir/lang")
+    def answers(co: Company): Seq[Seq[String]] =
+      Seq(co.df, co.report("assets"), co.customReport(Seq("1", "3.01", "6.01")), co.indicators(),
+        co.info()).map(_.collect().map(_.toString).toSeq)
+    val ids = Seq((1, true), (2, false))
+    val loaded = ids.map { case (id, cons) => answers(d.company(id, cons, accUnit = "m")) }
+    // Each read's RDD is its planned frame's executed plan: one scan of
+    // FinData's cache, and no file.
+    for ((cache, planned) <- Seq(d.financials -> d.plannedFinancials,
+                                 d.indicators -> d.plannedIndicators)) {
+      val plan = planned.frame.queryExecution.executedPlan
+      assert(planned.rdd eq planned.frame.queryExecution.toRdd)
+      assert(scans(plan, cacheOf(cache)).size == 1, s"no scan of the cache:\n$plan")
+      assert(collect(plan) { case s: FileSourceScanExec => s }.isEmpty, s"scans a file:\n$plan")
+    }
+    val co = d.company(2)
+    assert(jobsOf("finlogic_first_indicators")(co.indicators().collect()) == 1)
+    d.unpersist()
+    assert(ids.map { case (id, cons) => answers(d.company(id, cons, accUnit = "m")) } == loaded)
   }
 
   test("four threads of sessions on one FinData answer as a sequential run") {
