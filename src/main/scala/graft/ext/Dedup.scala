@@ -705,25 +705,26 @@ object Dedup {
     * chain converges in ~10 sweeps. Each sweep is two equi-joins + a
     * min aggregate (all shuffle by id).
     *
-    * LINEAGE: every sweep's frame is cut to a materialized RDD with an
-    * EAGER localCheckpoint. `persist()` is NOT enough here — it caches
-    * rows but keeps the full logical plan, and this loop references
-    * `hop` twice (self-join), so an un-truncated plan tree grows ~3x per sweep:
-    * exponential driver-side analysis that froze at sf0.1 (2 GiB plan
-    * strings) while sf0.01 converged fine. With the checkpoint, every
-    * sweep starts from a constant-size LogicalRDD scan, at any scale.
-    * Superseded sweeps' checkpoint blocks are unpersisted EAGERLY once
-    * the successor sweep materializes (at most two label tables — each
-    * ≤ one row per dup-cluster member, a sliver of the corpus — are
-    * live at once), and the final table is Staging-registered so the
-    * query harness's releaseAll() frees it after the consuming action
-    * instead of waiting on ContextCleaner GC. If maxIter is hit before a sweep
-    * changes nothing the result would be WRONG (a cluster split in
-    * two), so the operator throws instead of returning silently.
+    * HARNESS: the distributed path is one [[graft.ops.Sweep.fold]]
+    * inside the edge pin's [[graft.ops.Sweep.scopePinned]], like
+    * [[Graphs.labelPropagation]]. Each sweep stamps a flag on the rows
+    * whose component moved, and fold halts
+    * ([[graft.ops.Sweep.Halt.NoneFlagged]]) at the first chunk whose
+    * last sweep flagged none; the flag count rides each chunk pin's own
+    * job. Fold's chunk pins bound the lineage: a sweep reads its input
+    * twice and the jumped table twice, so an uncut plan tree grows ~4x
+    * per sweep (a driver-side analysis blow-up seen at sf0.1 before
+    * any checkpoint existed). The sweeps run at
+    * [[graft.ops.Sweep.sweepPartitions]]' count. Superseded chunk
+    * pins are dropped as their successor lands, and the last one is
+    * Staging-registered, so the query harness's releaseAll() frees it
+    * after the consuming action. If no sweep within maxIter changed
+    * nothing the result would be WRONG (a cluster split in two), so
+    * the operator throws instead of returning silently.
     *
-    * ADAPTIVE SMALL-GRAPH PATH: each distributed sweep is several
-    * jobs (two joins, a min aggregate, a checkpoint materialization,
-    * a convergence count) whose fixed scheduling cost dwarfs the work
+    * ADAPTIVE SMALL-GRAPH PATH: the distributed sweeps cost a
+    * scheduler job per chunk of sweeps (two joins and a min aggregate
+    * each), a fixed scheduling cost that dwarfs the work
     * when the dup graph is small — and near-dup graphs usually ARE
     * small next to their corpus (edges ≈ dup-cluster members, a
     * sliver of n). So, exactly like Spark's own broadcast-join
@@ -747,96 +748,70 @@ object Dedup {
                           smallGraphThreshold: Long = 1L << 21): DataFrame =
     connectedComponentsWithSweeps(pairs, aCol, bCol, maxIter, smallGraphThreshold)._1
 
-  /** [[connectedComponents]] plus the sweep count it converged in —
-    * spec-only instrumentation pinning the O(log diameter)
-    * pointer-jumping promise (a regression to O(diameter) sweeps
-    * would still converge on small graphs, just catastrophically
-    * slower at scale; the count is the observable). */
+  /** [[connectedComponents]] plus the sweeps its fold ran (0 on the
+    * driver path) — spec-only instrumentation pinning the
+    * O(log diameter) pointer-jumping promise (a regression to
+    * O(diameter) sweeps would still converge on small graphs, just
+    * catastrophically slower at scale; the count is the observable).
+    * Fold checks for a fixpoint at each chunk's last sweep, so the
+    * count is rounded up to the chunk that found it. */
   private[graft] def connectedComponentsWithSweeps(
       pairs: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b", maxIter: Int = 25,
       smallGraphThreshold: Long = 1L << 21): (DataFrame, Int) = {
-    // one-pass symmetrization + a dst-declared pin (the r13 Sweep
-    // harness): the union form evaluated the caller's pair-generation
-    // pipeline twice, and the lazy cache's partitioning was invisible
-    // under AQE, so every label sweep re-exchanged the EDGE frame on
-    // dst — the dominant per-sweep shuffle at scale. Pinned on dst,
-    // each sweep's edges⋈labels join co-locates the edge side for
-    // free and only the node-sized label frame moves.
-    val (edges, edgeRows) = graft.ops.Sweep.pin(
-      graft.ops.Sweep.symmetrize(pairs, aCol, bCol).distinct(), Seq("dst"),
-      pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    import graft.ops.Sweep
+    // one-pass symmetrization + a dst-declared pin: pinned on dst,
+    // each sweep's edges⋈labels join co-locates the edge side for free
+    // and only the node-sized label frame moves
+    val (edges, edgeRows) = Sweep.pin(
+      Sweep.symmetrize(pairs, aCol, bCol).distinct(), Seq("dst"),
+      Sweep.defaultPartitions(pairs.sparkSession))
     val idType = pairs.schema(aCol).dataType
     val integral = idType == org.apache.spark.sql.types.LongType ||
       idType == org.apache.spark.sql.types.IntegerType
     // the pin already materialized the edge list, so neither path
     // recomputes pair generation; the gate count is the pin's own
-    // fused count (a separate count job before)
+    // fused count, taken before the sweep scope re-pins
     if (integral && smallGraphThreshold > 0 &&
         edgeRows <= smallGraphThreshold) {
       return (driverComponents(pairs.sparkSession, edges, idType), 0)
     }
-    // seed at sweep-1's result directly: label = min(v, min neighbors)
-    // (one aggregate over the symmetric edge list saves a full sweep)
-    // Every checkpoint is Staging-registered so the harness's
-    // releaseAll() frees its blocks after the consuming action, and
-    // superseded sweeps drop eagerly below — before round 9 these
-    // blocks waited on ContextCleaner GC and could leak into the next
-    // query's measurement.
-    var ckpt = graft.ops.Staging.stageCheckpoint(
-      edges.groupBy("src").agg(min(col("dst")).as("nbr"))
+    Sweep.scopePinned(edges, "dst", edgeRows) { (e, np, _) =>
+      // seed at sweep-1's result directly: label = min(v, min neighbors)
+      // (one aggregate over the symmetric edge list saves a full sweep)
+      val init = e.groupBy("src").agg(min(col("dst")).as("nbr"))
         .select(col("src").as("id"), least(col("src"), col("nbr")).as("component"))
-        .localCheckpoint(true))
-    var labels = ckpt
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      val nbr = edges
-        .join(labels.select(col("id").as("dst"), col("component").as("dst_comp")), "dst")
-        .groupBy("src").agg(min("dst_comp").as("nbr_comp"))
-      // hop is checkpointed too: the pointer jump below reads it TWICE
-      // (self-join), so materializing it once halves the sweep's work
-      // and keeps both join inputs constant-size scans. The pre-sweep
-      // label rides along as `prev` so convergence is a filter over
-      // the checkpointed frame — no join-back-to-labels shuffle.
-      val hop = graft.ops.Staging.stageCheckpoint(labels
-        .join(nbr.select(col("src").as("id"), col("nbr_comp")), Seq("id"), "left")
-        .select(col("id"), col("component").as("prev"),
-          least(col("component"), coalesce(col("nbr_comp"), col("component"))).as("component"))
-        .localCheckpoint(true))
-      // pointer jump: follow the new label one more step (labels are
-      // node ids, so they resolve in the same table)
-      // next's checkpoint is LAZY: the convergence count right below
-      // scans every partition, so it both materializes the checkpoint
-      // and computes `changed` in one job (eager would spend a
-      // separate materialization job per sweep). hop stays EAGER
-      // because the self-join reads it twice within a single job —
-      // lazy materialization under concurrent scans would compute it
-      // twice.
-      val next = graft.ops.Staging.stageCheckpoint(hop
-        .join(hop.select(col("id").as("component"), col("component").as("jumped")),
+      def sweep(state: DataFrame): DataFrame = {
+        val labels = state.select("id", "component")
+        val nbr = e
+          .join(labels.select(col("id").as("dst"), col("component").as("dst_comp")), "dst")
+          .groupBy("src").agg(min("dst_comp").as("nbr_comp"))
+        // the pre-sweep label rides along as `prev` for the flag. The
+        // pointer jump below reads hop twice, and hop is not sealed: it
+        // is already laid out hash(id), so EnsureRequirements drops a
+        // repartition(np, id) as redundant. The second read reruns the
+        // co-located labels⋈nbr join over nbr's reused exchange.
+        val hop = labels
+          .join(nbr.select(col("src").as("id"), col("nbr_comp")), Seq("id"), "left")
+          .select(col("id"), col("component").as("prev"),
+            least(col("component"), coalesce(col("nbr_comp"), col("component"))).as("component"))
+        // pointer jump: follow the new label one more step (labels are
+        // node ids, so they resolve in the same table)
+        val next = coalesce(col("jumped"), col("component"))
+        hop.join(hop.select(col("id").as("component"), col("component").as("jumped")),
               Seq("component"), "left")
-        .select(col("id"), col("prev"), coalesce(col("jumped"), col("component")).as("component"))
-        .localCheckpoint(false))
-      changed = next.filter(col("component") =!= col("prev")).count()
-      // next is materialized (the count scanned every partition), so
-      // the previous sweep's label table and this sweep's hop are dead
-      // — free their blocks now instead of holding O(sweeps) tables
-      labels = next.select("id", "component")
-      graft.ops.Staging.dropCheckpoint(ckpt)
-      graft.ops.Staging.dropCheckpoint(hop)
-      ckpt = next
-      iter += 1
+          .select(col("id"), next.as("component"), (next =!= col("prev")).as("__chg"))
+      }
+      val run = Sweep.fold(init, maxIter, Seq("id"), np,
+        Sweep.Halt.NoneFlagged("__chg"))(sweep)
+      if (!run.halted) {
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter sweeps " +
+            "(graph diameter > 2^maxIter is not a realistic dup cluster; " +
+            "raise maxIter if yours truly is)")
+      }
+      (run.state.select("id", "component"), run.sweeps)
     }
-    if (changed > 0) {
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter sweeps " +
-          "(graph diameter > 2^maxIter is not a realistic dup cluster; " +
-          "raise maxIter if yours truly is)")
-    }
-    // already materialized; the live checkpoint's blocks are freed by
-    // the harness's Staging.releaseAll() after the consuming action
-    (labels, iter)
   }
 
   /** Small-graph tail of [[connectedComponents]]: union-by-min

@@ -239,7 +239,7 @@ object Graphs {
       // each chunk pin's own materializing job.
       Sweep.fold(init, iterations, Seq("node"), np,
           Halt.NoneFlagged("__chg"))(step)
-        .select("node", "label")
+        .state.select("node", "label")
     }
   }
 
@@ -390,7 +390,7 @@ object Graphs {
       }
       // Chunked pin cadence (r15 verdict): 2-3 sweeps per checkpoint
       // with sealed intermediates — see [[Sweep.fold]]
-      Sweep.fold(init, sweeps, Seq("node"), np)(relaxMerge)
+      Sweep.fold(init, sweeps, Seq("node"), np)(relaxMerge).state
     }
 
   /** k-core peeling: repeatedly remove nodes of degree < k (and
@@ -478,7 +478,7 @@ object Graphs {
       // scheduler jobs disappear. The count is fused into each chunk
       // pin's materializing job, job count per sweep unchanged.
       Sweep.fold(init, sweeps, Seq("src"), np,
-        Halt.RowsUnchanged(initEdges))(peel)
+        Halt.RowsUnchanged(initEdges))(peel).state
     }
   }
 
@@ -604,8 +604,8 @@ object Graphs {
       val flags = nodesF.columns.toSeq.map(col)
       // Each sweep references the prior rank frame twice (the D
       // filter-aggregate and the mass join), so a lazy lineage
-      // compounds per iteration — periodic eager checkpoints (the
-      // CC-sweep idiom) bound the plan; superseded checkpoints are
+      // compounds per iteration — fold's periodic eager checkpoints
+      // bound the plan; superseded checkpoints are
       // dropped once the successor exists. Since r16 the cadence is TWO
       // sweeps per checkpoint (r15 verdict): the pair's intermediate
       // rank frame is sealed with a repartition(np, node) exchange
@@ -645,7 +645,7 @@ object Graphs {
           .select(flags :+ rank(c).as("pr"): _*)
       }
       Sweep.fold(nodesF.select(flags :+ init(c).as("pr"): _*),
-          iterations, Seq("node"), np)(sweep)
+          iterations, Seq("node"), np)(sweep).state
         .join(outdeg.hint("shuffle_hash"), col("node") === col("src"), "left")
     }
   }

@@ -581,7 +581,7 @@ object Similarity {
                   .as("psim")))
     // Each step reads `selected` twice (anti-join + penalty join), so
     // without truncation the analyzed plan DOUBLES per step — an
-    // eager localCheckpoint (the CC-sweep idiom) keeps every step's
+    // eager localCheckpoint keeps every step's
     // plan constant-size; the superseded checkpoint's blocks are
     // freed as soon as its successor is materialized.
     var selected = graft.ops.Staging.stageCheckpoint(

@@ -627,27 +627,6 @@ object Kernels {
         col("e.n_violations"), col("e.violation_rate")): _*)
   }
 
-  /** Globally dense 0-based index (`outCol`: Long) in `orderCol`
-    * order — the scalable form of `row_number() OVER (ORDER BY c)`.
-    *
-    * A global window collapses to ONE partition (the classic 100 TB
-    * killer); this instead range-partitions on the key, sorts within
-    * each partition (parallel), and assigns offsets with
-    * `zipWithIndex`'s count-per-partition pass. The index depends
-    * only on the total order, not on where range bounds fall, so it
-    * is deterministic under any partitioning PROVIDED `orderCol` is
-    * unique (ties would be ordered arbitrarily — callers pass a key
-    * column).
-    *
-    * The sorted frame is STAGED before the zip: zipWithIndex runs a
-    * count job before its map pass, and without the persist both
-    * would recompute the range-sort — the sort is paid once, the
-    * count pass populates the cache, the zip pass reads it back
-    * (released by the harness via Staging.releaseAll). RDD zip is
-    * deliberate: dense global numbering is per-partition imperative
-    * logic no Catalyst operator expresses without the
-    * single-partition window.
-    */
   /** Grouped quantiles with an exactness switch — the [[profile]]
     * `exact = false` pattern for the percentile family (q149 robust
     * stats, q175 winsorization, q198 latency percentiles).
@@ -725,6 +704,27 @@ object Kernels {
     }
   }
 
+  /** Globally dense 0-based index (`outCol`: Long) in `orderCol`
+    * order — the scalable form of `row_number() OVER (ORDER BY c)`.
+    *
+    * A global window collapses to ONE partition (the classic 100 TB
+    * killer); this instead range-partitions on the key, sorts within
+    * each partition (parallel), and assigns offsets with
+    * `zipWithIndex`'s count-per-partition pass. The index depends
+    * only on the total order, not on where range bounds fall, so it
+    * is deterministic under any partitioning PROVIDED `orderCol` is
+    * unique (ties would be ordered arbitrarily — callers pass a key
+    * column).
+    *
+    * The sorted frame is STAGED before the zip: zipWithIndex runs a
+    * count job before its map pass, and without the persist both
+    * would recompute the range-sort — the sort is paid once, the
+    * count pass populates the cache, the zip pass reads it back
+    * (released by the harness via Staging.releaseAll). RDD zip is
+    * deliberate: dense global numbering is per-partition imperative
+    * logic no Catalyst operator expresses without the
+    * single-partition window.
+    */
   def denseIndex(df: DataFrame, orderCol: String, outCol: String): DataFrame =
     denseIndex(df, Seq(col(orderCol)), outCol)
 

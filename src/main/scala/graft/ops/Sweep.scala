@@ -23,11 +23,14 @@ import org.apache.spark.sql.functions._
   *    cost (edge frame >> node frame). See
   *    [[org.apache.spark.sql.execution.GraftPartitionedCheckpoint]].
   *  - [[fold]]: the chunked sweep loop (a checkpoint every 2-3 sweeps,
-  *    repartition seals in between) under a [[Halt]] rule.
+  *    repartition seals in between) under a [[Halt]] rule. Its users:
+  *    BFS/SSSP, label propagation, k-core, directed PageRank and
+  *    connected components (`Dedup.connectedComponents`).
   *  - [[edgeScope]]: pins an operator's edge frame, derives the
   *    scale-adaptive partition count ([[sweepPartitions]]) from its
   *    row count, and runs the operator body inside
-  *    [[withShufflePartitions]] at that count.
+  *    [[withShufflePartitions]] at that count. [[scopePinned]] is its
+  *    second half, for an operator that acts on the count first.
   *  - [[withoutAqe]]: the scope every pin's materializing job runs in.
   */
 object Sweep {
@@ -86,11 +89,9 @@ object Sweep {
     * in AQE's own advisory band; the cap keeps cluster behavior
     * unchanged — at 100 TB `rows/target` exceeds any session's
     * shuffle.partitions, so the operator runs exactly as before. */
-  def sweepPartitions(spark: SparkSession, rows: Long): Int = {
-    val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    math.min(cap.toLong,
+  def sweepPartitions(spark: SparkSession, rows: Long): Int =
+    math.min(defaultPartitions(spark).toLong,
       math.max(1L, (rows + PartitionRows - 1) / PartitionRows)).toInt
-  }
 
   /** Pin an operator's edge frame ONCE with a fused count, derive the
     * sweep partition count `np` from the MEASURED edge rows
@@ -107,17 +108,30 @@ object Sweep {
     * of every sweep join. */
   def edgeScope[T](edges: DataFrame, key: String)
                   (body: (DataFrame, Int, Long) => T): T = {
-    val spark = edges.sparkSession
-    val defN = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val (p0, rows) = pin(edges, Seq(key), defN)
+    val (p0, rows) = pin(edges, Seq(key), defaultPartitions(edges.sparkSession))
+    scopePinned(p0, key, rows)(body)
+  }
+
+  /** [[edgeScope]] for an edge frame the caller already pinned on `key`
+    * at [[defaultPartitions]], `rows` being that pin's fused count. It
+    * lets an operator decide on the count before any re-pin runs
+    * (connected components hands a small graph to the driver). */
+  def scopePinned[T](p0: DataFrame, key: String, rows: Long)
+                    (body: (DataFrame, Int, Long) => T): T = {
+    val spark = p0.sparkSession
     val np = sweepPartitions(spark, rows)
-    val e = if (np == defN) p0 else {
+    val e = if (np == defaultPartitions(spark)) p0 else {
       val p = pin(p0, Seq(key), np)._1
       Staging.dropCheckpoint(p0)
       p
     }
     withShufflePartitions(spark, np)(body(e, np, rows))
   }
+
+  /** The session's `spark.sql.shuffle.partitions`: the count an edge
+    * frame is first pinned at, and the cap of [[sweepPartitions]]. */
+  def defaultPartitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** When [[fold]] stops before its sweep budget. Fixed budgets stay
     * the determinism contract (the output is identical either way —
@@ -170,12 +184,15 @@ object Sweep {
     * material; a lazy (non-checkpoint) `init` is left untouched
     * ([[Staging.dropCheckpoint]] is a no-op for it).
     *
-    * NOT used by convergence-gated loops that must observe every
-    * sweep (Dedup.connectedComponents): their sweeps cannot
-    * blind-compose. */
+    * Returns the final state, the sweeps run and whether `halt` fired.
+    * Under [[Halt.NoneFlagged]] a state that reproduces itself is a
+    * fixpoint, so "the halt fired within `total`" is the same test as
+    * "some sweep within `total` changed nothing": a loop that must
+    * converge within its budget (connected components) throws when
+    * `halted` is false. */
   def fold(init: DataFrame, total: Int, keys: Seq[String], n: Int,
            halt: Halt = Halt.Budget)
-          (step: DataFrame => DataFrame): DataFrame = {
+          (step: DataFrame => DataFrame): Folded = {
     require(total >= 1, "total sweeps must be >= 1")
     // Intra-chunk intermediates are sealed with a repartition(n, keys)
     // EXCHANGE, not a persist: a cached frame is a NARROW dependency,
@@ -221,8 +238,12 @@ object Sweep {
       }
       prevRows = cnt
     }
-    cur
+    Folded(cur, done, converged)
   }
+
+  /** What [[fold]] ran: its final `state`, the `sweeps` it took, and
+    * whether its [[Halt]] rule fired (never under [[Halt.Budget]]). */
+  final case class Folded(state: DataFrame, sweeps: Int, halted: Boolean)
 
   // r22 (r21 advice): guard against NESTED scopes on the same thread —
   // an inner scope would plan the outer operator's remaining exchanges

@@ -9,11 +9,6 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Directories whose Long-encoded events.ts already passed the
-    * epoch-nanos magnitude probe (one validation scan per JVM). */
-  private val validatedNanosDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
@@ -27,54 +22,16 @@ object Tables {
   def documents(s: SparkSession, d: String) = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String) = table(s, d, "embeddings")
 
-  /** events.parquet has shipped `ts` in two physical encodings across
-    * testdata generations, so the loader adapts to whichever is on disk
-    * and always hands callers a session-TZ `TimestampType` column:
-    *
-    *  - parquet TIMESTAMP(NANOS): the Spark vectorized reader rejects
-    *    it, so read nanos as Long (`spark.sql.legacy.parquet.
-    *    nanosAsLong`) and convert via `timestamp_micros(ts div 1000)`.
-    *    `div` (integer division) is required: epoch-nanos ~1.7e18
-    *    exceeds 2^53, so a double round-trip would lose precision, and
-    *    truncation matches DuckDB's ns->us cast. The flag mutates the
-    *    session conf (no per-read form in Spark 4.1.2 — r3 audit), but
-    *    only TIMESTAMP(NANOS) columns are affected and no other
-    *    testdata table has one, so the stickiness is benign.
-    *  - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark reads
-    *    TIMESTAMP_NTZ; cast to TimestampType (identity on the stored
-    *    micros — every entry point pins spark.sql.session.timeZone=UTC)
-    *    so downstream window/date_format/unix_micros code is unchanged.
+  /** events.parquet stores `ts` as parquet TIMESTAMP(MICROS,
+    * isAdjustedToUTC=false), which Spark reads as TIMESTAMP_NTZ. The
+    * loader casts it to a session-TZ `TimestampType` column (identity
+    * on the stored micros — every entry point pins
+    * spark.sql.session.timeZone=UTC), so downstream window/date_format/
+    * unix_micros code is unchanged. It sets no session conf.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = table(spark, dir, "events")
     df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        // Under the nanosAsLong flag, LongType here means the file's
-        // logical type was TIMESTAMP(NANOS) — but guard the /1000
-        // against a future generation storing plain INT64
-        // epoch-MICROS, which would be silently divided into the
-        // 1970s. Epoch-nanos for any plausible event time (2001+)
-        // exceed 1e18; epoch-micros sit near 1.7e15. The min() probe
-        // runs ONCE per directory per JVM (memoized) so per-query
-        // plans don't each pay a scan.
-        if (!validatedNanosDirs.contains(s"$dir/events.parquet")) {
-          // Nanos-band floor at 1e17 (ADVICE r11 — the old 1e18 floor
-          // rejected legitimate pre-2001 nanos): 1e17 ns = 1973, so
-          // any post-1973 nanos dataset loads, while epoch-micros
-          // (~1.7e15 for 2024, below 1e17 until year 5138),
-          // epoch-millis and epoch-seconds all land far below the
-          // band and fail loudly instead of being divided into 1970.
-          val mm = df.agg(min(col("ts"))).head()
-          if (!mm.isNullAt(0) &&
-              (mm.getLong(0) < 100000000000000000L))
-            throw new IllegalStateException(
-              s"events.ts is Long but min=${mm.getLong(0)} is below the " +
-                "epoch-nanos band (>= 1e17, i.e. post-1973) — a new INT64 " +
-                "encoding (micros/millis)? Adapt Tables.events.")
-          validatedNanosDirs.add(s"$dir/events.parquet")
-        }
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case org.apache.spark.sql.types.TimestampNTZType =>
         df.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case org.apache.spark.sql.types.TimestampType => df

@@ -1005,6 +1005,38 @@ class ExtSpec extends AnyFunSuite {
     graft.ops.Staging.releaseAll()
   }
 
+  test("connectedComponents: every sweep budget either throws or returns union-find's labels") {
+    // Threshold 0 forces the distributed sweeps. A budget that runs out
+    // before a sweep changes nothing must throw; any budget past that
+    // point must return the labels of the driver union-find path. The
+    // first budget that returns is the sweep count the chain needs.
+    for ((n, firstReturning) <- Seq(5 -> 2, 40 -> 5)) {
+      val chain = (0 until n - 1).map(i => (i.toLong, (i + 1).toLong))
+        .toDF("id_a", "id_b")
+      val expected = Dedup.connectedComponents(chain).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      var first = -1
+      var maxIter = 1
+      while ((first < 0 && maxIter <= 30) || maxIter <= first + 2) {
+        try {
+          val got = Dedup.connectedComponents(chain, maxIter = maxIter,
+              smallGraphThreshold = 0)
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+          assert(got == expected, s"chain of $n, maxIter $maxIter: wrong labels")
+          if (first < 0) first = maxIter
+        } catch {
+          case e: IllegalStateException =>
+            assert(first < 0,
+              s"chain of $n: maxIter $maxIter threw after $first returned: $e")
+        }
+        graft.ops.Staging.releaseAll()
+        maxIter += 1
+      }
+      assert(first == firstReturning,
+        s"chain of $n: first returning budget $first, expected $firstReturning")
+    }
+  }
+
   test("connectedComponents equals union-find on random graphs (seeded)") {
     val rnd = new scala.util.Random(42)
     for (trial <- 0 until 3) {

@@ -538,6 +538,9 @@ class GraphsSpec extends AnyFunSuite {
     // took 4 and 11 jobs: cc-driver's count() over its 4-partition pin
     // was two jobs under AQE (the aggregate's shuffle stage plus the
     // result), the seed count over a 1-partition pin needed no shuffle.
+    // cc-sweeps: the edge pin, the re-pin at sweepPartitions' count,
+    // one chunk pin (its fused flag count halts the fold) and the
+    // collect.
     val sc = spark.sparkContext
     val star = Seq(("c", "l1"), ("c", "l2"), ("c", "l3"), ("c", "l4"))
       .toDF("a", "b")
@@ -575,7 +578,7 @@ class GraphsSpec extends AnyFunSuite {
       ("cc-driver", () => graft.ext.Dedup.connectedComponentsWithSweeps(
         pairs)._1.collect(), 2),
       ("cc-sweeps", () => graft.ext.Dedup.connectedComponentsWithSweeps(
-        pairs, smallGraphThreshold = 0)._1.collect(), 26))
+        pairs, smallGraphThreshold = 0)._1.collect(), 4))
     val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(

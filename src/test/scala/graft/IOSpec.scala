@@ -13,6 +13,19 @@ class IOSpec extends AnyFunSuite {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  test("Tables.events leaves the session conf as it found it") {
+    // loading a table must not change settings that every later query
+    // of the session reads
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    val before = spark.conf.getAll
+    val ev = Tables.events(spark, "/root/testdata/sf0.001")
+    assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    assert(ev.limit(1).collect().length == 1)
+    val after = spark.conf.getAll
+    val changed = (after.toSet diff before.toSet) ++ (before.toSet diff after.toSet)
+    assert(changed.isEmpty, s"Tables.events changed the session conf: $changed")
+  }
+
   test("CSV sink/source round-trips with an explicit schema") {
     val dir = tmp("csv")
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
